@@ -23,6 +23,7 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from sift_spark.caching import ARTIFACTS, release_local_caches
     from sift_spark.queries import QUERIES
     from sift_spark.session import get_spark, shuffle_partitions_for
 
@@ -254,9 +255,11 @@ def main() -> None:
     # plan shape — measured 3-4x the steady-state cost at 60 MB — a
     # warmup a 1000-executor deployment amortizes away entirely, and
     # one the warm DuckDB baseline never pays). cold_total_sec keeps
-    # the first-run aggregate visible. The three corpus_* artifact
-    # lines stay FIRST-run by design: their line exists to account the
-    # artifact build cost, which a warm re-read would hide.
+    # the first-run aggregate visible. The session artifacts'
+    # accounting lines (ARTIFACTS[...].query: corpus_tokens, corpus_tf,
+    # corpus_shingles, dedup_minhash_lsh) stay FIRST-run by design:
+    # their line exists to account the artifact build cost, which a
+    # warm re-read would hide.
     times: dict[str, float] = {}
     cold: dict[str, float] = {}
     n_jobs: dict[str, int] = {}
@@ -270,22 +273,12 @@ def main() -> None:
     # them — the warm-min would measure a cache read, not the engine.
     # Builders register those persists in sift_spark.caching; releasing
     # them between the reps makes every timed run recompute from the
-    # parquet inputs. Session ARTIFACTS (corpus_* / dedup_minhash_lsh
-    # lines) are exempt by design: cross-query reuse is their
-    # documented contract and their build cost is accounted on their
-    # own COLD lines.
-    from sift_spark.caching import release_local_caches
-    # r11: dedup_minhash_lsh joined the artifact set — its result (the
-    # verified near-dup pair table at the catalog banding) is now the
-    # session artifact the dedup graph family consumes, so its line
-    # stays FIRST-run like the corpus_* lines: the build cost must be
-    # accounted, never hidden behind a warm cache read.
-    artifact_lines = {"corpus_tokens", "corpus_tf", "corpus_shingles",
-                      "dedup_minhash_lsh"}
+    # parquet inputs. Session ARTIFACTS are exempt by design:
+    # cross-query reuse is their documented contract and their build
+    # cost is accounted on their own COLD lines.
+    artifact_lines = {a.query for a in ARTIFACTS.values() if a.query}
     for name in headline:
-        fn = QUERIES.get(name)
-        if fn is None:
-            continue
+        fn = QUERIES[name]
         # per-query job group: the scheduled-job count decomposes the
         # small-SF eagerness floor (each scheduled job costs ~0.3-0.5s
         # at 60 MB regardless of data) from real data work — the
@@ -371,8 +364,6 @@ def main() -> None:
     # derived mechanically from each query builder's source.
     import inspect
 
-    art_helpers = ("_docs_tokenized", "_docs_shingles", "_docs_tf",
-                   "_docs_pairs", "_docs_bands")
     art_lines = [q for q in times if q in artifact_lines]
     full = dict(out)
     full["queries_cold"] = cold
@@ -381,7 +372,7 @@ def main() -> None:
     full["artifact_marginal"] = sorted(
         q for q in times
         if q not in art_lines
-        and any(h in inspect.getsource(QUERIES[q]) for h in art_helpers)
+        and any(h in inspect.getsource(QUERIES[q]) for h in ARTIFACTS)
     )
     full_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"

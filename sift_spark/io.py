@@ -61,10 +61,12 @@ def _content_fingerprint(path: str):
         return None
 
 
-def _evict_dead_sessions(live_app_id: str) -> None:
-    dead = [k for k in _TABLE_CACHE if k[0] != live_app_id]
+def evict_dead_sessions(cache: dict, live_app_id: str) -> None:
+    """Drop the entries of a session-keyed cache (key[0] is the
+    applicationId) that belong to any session but the live one."""
+    dead = [k for k in cache if k[0] != live_app_id]
     for k in dead:
-        del _TABLE_CACHE[k]
+        del cache[k]
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -72,7 +74,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     fp = _content_fingerprint(path)
     if fp is not None:
         app_id = spark.sparkContext.applicationId
-        _evict_dead_sessions(app_id)
+        evict_dead_sessions(_TABLE_CACHE, app_id)
         key = (app_id, path, fp)
         df = _TABLE_CACHE.get(key)
         if df is not None:

@@ -203,6 +203,35 @@ def entity_comentions(links: DataFrame) -> DataFrame:
     )
 
 
+def comention_edges(il: DataFrame) -> DataFrame:
+    """Directed comention edges (src, dst) of a doc-distinct
+    (doc_id, target) table: both orientations of every entity pair
+    sharing a document, no self-loops, each edge once — symmetric by
+    construction. The keyed self-join on doc_id (never a cross join)
+    fans out deg(d)² per document."""
+    return (
+        il.alias("l")
+        .join(il.alias("r"), "doc_id")
+        .where(F.col("l.target") != F.col("r.target"))
+        .select(F.col("l.target").alias("src"), F.col("r.target").alias("dst"))
+        .distinct()
+    )
+
+
+def comention_pair_counts(il: DataFrame) -> DataFrame:
+    """Undirected comention pairs (e1, e2, n) of a doc-distinct
+    (doc_id, target) table: e1 < e2, n = number of documents linking
+    both. Same keyed self-join as :func:`comention_edges`; the pair
+    aggregate doubles as the distinct edge list."""
+    return (
+        il.alias("l")
+        .join(il.alias("r"), "doc_id")
+        .where(F.col("l.target") < F.col("r.target"))
+        .groupBy(F.col("l.target").alias("e1"), F.col("r.target").alias("e2"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
 def entity_relatedness(links: DataFrame, min_inlinks: int = 1) -> DataFrame:
     """Pairwise entity relatedness as jaccard over inlink sets — the
     inlink-based relatedness modeling the reference advertises
@@ -215,13 +244,7 @@ def entity_relatedness(links: DataFrame, min_inlinks: int = 1) -> DataFrame:
     # materialize: self-join sides + size aggregate race
     il = local_persist(links.select("doc_id", "target").distinct())
     sizes = il.groupBy("target").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        il.alias("l")
-        .join(il.alias("r"), "doc_id")
-        .where(F.col("l.target") < F.col("r.target"))
-        .groupBy(F.col("l.target").alias("e1"), F.col("r.target").alias("e2"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    inter = comention_pair_counts(il).withColumnRenamed("n", "inter")
     return (
         inter.join(sizes.select(F.col("target").alias("e1"), F.col("n").alias("n1")), "e1")
         .join(sizes.select(F.col("target").alias("e2"), F.col("n").alias("n2")), "e2")
@@ -274,15 +297,9 @@ def entity_pagerank(links: DataFrame, damping: float = 0.85, n_iter: int = 5) ->
     with a fixed iteration count the whole computation is one lazy
     plan; edges/degrees are persisted for reuse across iterations.
     """
-    il = links.select("doc_id", "target").distinct()
-    edges = (
-        il.alias("l")
-        .join(il.alias("r"), "doc_id")
-        .where(F.col("l.target") != F.col("r.target"))
-        .select(F.col("l.target").alias("src"), F.col("r.target").alias("dst"))
-        .distinct()
+    edges = local_persist(
+        comention_edges(links.select("doc_id", "target").distinct()), eager=False
     )
-    edges = local_persist(edges, eager=False)
     deg = local_persist(
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), eager=False
     )
@@ -354,11 +371,8 @@ def entity_pmi(links: DataFrame, min_pair_count: int = 1) -> DataFrame:
     n_docs = il.select("doc_id").distinct().agg(F.count(F.lit(1)).alias("n_docs"))
     marg = il.groupBy("target").agg(F.count(F.lit(1)).alias("c"))
     pairs = (
-        il.alias("l")
-        .join(il.alias("r"), "doc_id")
-        .where(F.col("l.target") < F.col("r.target"))
-        .groupBy(F.col("l.target").alias("e1"), F.col("r.target").alias("e2"))
-        .agg(F.count(F.lit(1)).alias("pair_count"))
+        comention_pair_counts(il)
+        .withColumnRenamed("n", "pair_count")
         .where(F.col("pair_count") >= min_pair_count)
     )
     return (
@@ -389,17 +403,11 @@ def comention_triangles(links: DataFrame) -> DataFrame:
     degree-ordered orientation (a < b) keeps the join fan-out to
     wedge counts."""
     il = links.select("doc_id", "target").distinct()
-    edges = (
-        il.alias("l")
-        .join(il.alias("r"), "doc_id")
-        .where(F.col("l.target") < F.col("r.target"))
-        .select(F.col("l.target").alias("a"), F.col("r.target").alias("b"))
-        .distinct()
-    )
-    edges = local_persist(edges)  # three wedge-join consumers race a lazy cache
-    e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    e3 = edges.select(F.col("a").alias("x"), F.col("b").alias("z"))
+    # three wedge-join consumers race a lazy cache
+    edges = local_persist(comention_pair_counts(il).select("e1", "e2"))
+    e1 = edges.select(F.col("e1").alias("x"), F.col("e2").alias("y"))
+    e2 = edges.select(F.col("e1").alias("y"), F.col("e2").alias("z"))
+    e3 = edges.select(F.col("e1").alias("x"), F.col("e2").alias("z"))
     tri = e1.join(e2, "y").join(e3, ["x", "z"]).select("x", "y", "z")
     per_node = (
         tri.select(F.explode(F.array("x", "y", "z")).alias("target"))
@@ -416,16 +424,10 @@ def comention_degrees(links: DataFrame) -> DataFrame:
     table (the self-join emits each undirected edge once; degree
     counts both orientations via the symmetric union)."""
     il = links.select("doc_id", "target").distinct()
-    e = (
-        il.alias("l")
-        .join(il.alias("r"), "doc_id")
-        .where(F.col("l.target") < F.col("r.target"))
-        .select(F.col("l.target").alias("a"), F.col("r.target").alias("b"))
-        .distinct()
-    )
-    e = local_persist(e)  # materialize: the symmetric union's two branches race
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    deg = sym.groupBy(F.col("a").alias("target")).agg(F.count(F.lit(1)).alias("degree"))
+    # materialize: the symmetric union's two branches race
+    e = local_persist(comention_pair_counts(il).select("e1", "e2"))
+    sym = e.union(e.select("e2", "e1"))
+    deg = sym.groupBy(F.col("e1").alias("target")).agg(F.count(F.lit(1)).alias("degree"))
     nd = il.groupBy("target").agg(F.count(F.lit(1)).alias("n_docs"))
     return deg.join(nd, "target").select("target", "degree", "n_docs")
 
@@ -502,16 +504,9 @@ def entity_components(links: DataFrame, min_comentions: int = 2) -> DataFrame:
 
     il = links.select("doc_id", "target").distinct()
     pairs = (
-        il.alias("l")
-        .join(
-            il.alias("r"),
-            (F.col("l.doc_id") == F.col("r.doc_id"))
-            & (F.col("l.target") < F.col("r.target")),
-        )
-        .groupBy(F.col("l.target").alias("doc1"), F.col("r.target").alias("doc2"))
-        .agg(F.count(F.lit(1)).alias("n"))
+        comention_pair_counts(il)
         .where(F.col("n") >= min_comentions)
-        .select("doc1", "doc2")
+        .select(F.col("e1").alias("doc1"), F.col("e2").alias("doc2"))
     )
     return duplicate_clusters_star(pairs).select(
         F.col("doc_id").alias("target"), F.col("rep_id").alias("component")
@@ -680,14 +675,7 @@ def entity_random_walks(links: DataFrame, n_walks: int = 2,
     lazy plan with ``walk_len`` joins — linear plan growth, no driver
     actions, no RNG state. No per-walk neighbor fan-out anywhere: a
     hub node costs one hash-table probe per visit, not deg rows."""
-    il = links.select("doc_id", "target").distinct()
-    e = (
-        il.alias("l")
-        .join(il.alias("r"), "doc_id")
-        .where(F.col("l.target") != F.col("r.target"))
-        .select(F.col("l.target").alias("src"), F.col("r.target").alias("dst"))
-        .distinct()
-    )
+    e = comention_edges(links.select("doc_id", "target").distinct())
     w_adj = Window.partitionBy("src").orderBy("dst")
     adj = local_persist(
         e.select(
@@ -748,15 +736,9 @@ def entity_link_prediction(links: DataFrame, max_degree: int = 1000) -> DataFram
     and bounds the join at Σ min(deg, cap)²). Existing edges drop via
     an anti-join on the edge list. A common neighbor always has
     degree ≥ 2, so ln(deg) is never 0."""
-    il = links.select("doc_id", "target").distinct()
-    e = (
-        il.alias("l")
-        .join(il.alias("r"), "doc_id")
-        .where(F.col("l.target") != F.col("r.target"))
-        .select(F.col("l.target").alias("src"), F.col("r.target").alias("dst"))
-        .distinct()
+    e = local_persist(
+        comention_edges(links.select("doc_id", "target").distinct()), eager=False
     )
-    e = local_persist(e, eager=False)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     mid = deg.where(F.col("deg") <= max_degree).withColumn(
         "w", 1.0 / F.log("deg")
@@ -803,14 +785,7 @@ def entity_node2vec_walks(links: DataFrame, p: float = 2.0, q: float = 0.5,
     never global. Output: (walk_id, start, path)."""
     from sift_spark.functions.core import MOD31, hash31
 
-    il = links.select("doc_id", "target").distinct()
-    e = (
-        il.alias("l")
-        .join(il.alias("r"), "doc_id")
-        .where(F.col("l.target") != F.col("r.target"))
-        .select(F.col("l.target").alias("src"), F.col("r.target").alias("dst"))
-        .distinct()
-    )
+    e = comention_edges(links.select("doc_id", "target").distinct())
     # r12 NOTE: an eager lineage cut here (localCheckpoint, the
     # _docs_pairs trick) was A/B-measured over 4 interleaved rounds
     # and REVERTED (shared-min 1.43→1.57 s, slower in 3 of 4 rounds):

@@ -15,9 +15,17 @@ jobs, and failures can surface at build time rather than action time.
 Plan-capture tooling (scripts/capture_plans.py) accepts this cost.
 Those builder-local caches are registered in ``sift_spark.caching``;
 call ``release_local_caches()`` after consuming results (bench.py
-does, between timed reps). Session ARTIFACTS (the ``_docs_*`` getters
-below) are exempt: cross-query reuse is their documented contract,
-released via ``CorpusArtifacts.release()``.
+does, between timed reps).
+
+The shared corpus artifacts (the ``_docs_*`` getters below) hold only
+their build expressions; ``sift_spark.caching.session_artifact``
+persists each once per (session, dataset), registers it in
+``caching.ARTIFACTS`` with the query that accounts its build on its
+own cold bench line, and releases it via
+``corpus_artifacts(spark, sf_dir).release()``. Cross-query reuse is
+their contract; the registered queries stay independently
+oracle-checkable (an artifact changes where rows come from, never
+what they are).
 """
 
 from __future__ import annotations
@@ -27,6 +35,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sift_spark.caching import release_artifacts, session_artifact
 from sift_spark.corpora.synthetic import token_pos_table, wikify_links
 from sift_spark.io import table
 from sift_spark.models import links as L
@@ -41,188 +50,122 @@ def _docs(spark, sf_dir):
     return table(spark, sf_dir, "documents")
 
 
-# One tokenized+hashed shingle table per (session, dataset), shared by
-# the whole shingle family (minhash/ngram/prefix/containment/novelty/
-# contamination/similar_docs): a production pipeline tokenizes the
-# corpus ONCE and materializes the artifact — the tokenize+md5 pass is
-# the dominant linear cost of every one of these operators, and
-# recomputing it per query is exactly what a real deployment never
-# does. Entries are persisted MEMORY_AND_DISK and keyed on the
-# applicationId so a dead session's entry is simply rebuilt; the
-# registered queries stay independently oracle-checkable (the cache
-# changes where the shingle rows come from, never what they are).
-_SHINGLE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-# The token-array artifact underneath it: documents + a ``toks``
-# column, cached once per (session, dataset). The regex-split pass is
-# the single most repeated cost of the whole text family (~1.6s/pass
-# at sf1 vs ~0.2s reading the cached arrays), and with_tokens /
-# classify shortcut on the pre-tokenized column, so passing this
-# frame in place of the raw table is semantics-identical.
-_TOKENS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The token-array artifact: documents + a ``toks`` column. The
+# regex-split pass is the single most repeated cost of the whole text
+# family (~1.6s/pass at sf1 vs ~0.2s reading the cached arrays), and
+# with_tokens / classify shortcut on the pre-tokenized column, so
+# passing this frame in place of the raw table is semantics-identical.
+@session_artifact(query="corpus_tokens")
 def _docs_tokenized(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _TOKENS_CACHE.get(key)
-    if df is None:
-        from sift_spark.functions.core import tagged_tokens
+    from sift_spark.functions.core import tagged_tokens
 
-        # repartition to the session parallelism BEFORE tokenizing: a
-        # cache pins its partitioning, and the raw parquet scan splits
-        # into ~size/128MB tasks — far fewer than the cores on a big
-        # executor — so every downstream map stage would run
-        # under-parallel forever (measured 6-task stages on 32 cores
-        # at sf1). The derived shingle artifact inherits this layout.
-        # tagged_tokens carries the provenance metadata the
-        # with_tokens/classify shortcut checks (never the bare name),
-        # plus the dataset id for the tf cross-frame guard.
-        df = (
-            _docs(spark, sf_dir)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .select("*", tagged_tokens(F.col("text"), dataset=sf_dir))
-            .persist()
-        )
-        df.count()  # materialize once; consumers branch from the cache
-        _TOKENS_CACHE[key] = df
-    return df
+    # repartition to the session parallelism BEFORE tokenizing: a
+    # cache pins its partitioning, and the raw parquet scan splits
+    # into ~size/128MB tasks — far fewer than the cores on a big
+    # executor — so every downstream map stage would run
+    # under-parallel forever (measured 6-task stages on 32 cores
+    # at sf1). The derived shingle artifact inherits this layout.
+    # tagged_tokens carries the provenance metadata the
+    # with_tokens/classify shortcut checks (never the bare name),
+    # plus the dataset id for the tf cross-frame guard.
+    return (
+        _docs(spark, sf_dir)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("*", tagged_tokens(F.col("text"), dataset=sf_dir))
+    )
 
 
+# One tokenized+hashed shingle table per n, shared by the whole
+# shingle family (minhash/ngram/prefix/containment/novelty/
+# contamination/similar_docs): the tokenize+md5 pass is the dominant
+# linear cost of every one of these operators, and recomputing it per
+# query is exactly what a real deployment never does.
+@session_artifact(query="corpus_shingles")
 def _docs_shingles(spark, sf_dir, n=3):
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    df = _SHINGLE_CACHE.get(key)
-    if df is None:
-        from sift_spark.operators.dedup import shingles_with_sizes
+    from sift_spark.operators.dedup import shingles_with_sizes
 
-        # built over the token artifact — the split pass is shared.
-        # r12: the artifact carries the map-side per-doc size column
-        # n_sh (zero extra shuffle — it is the pre-explode array size),
-        # so jaccard/containment consumers carry pair sizes through
-        # their self-joins instead of re-aggregating and joining them
-        # back. The registered corpus_shingles query projects it away
-        # to keep the oracle-checked (doc_id, shingle, h) schema.
-        df = shingles_with_sizes(_docs_tokenized(spark, sf_dir), n).persist()
-        df.count()  # materialize once; consumers branch from the cache
-        _SHINGLE_CACHE[key] = df
-    return df
+    # built over the token artifact — the split pass is shared.
+    # r12: the artifact carries the map-side per-doc size column
+    # n_sh (zero extra shuffle — it is the pre-explode array size),
+    # so jaccard/containment consumers carry pair sizes through
+    # their self-joins instead of re-aggregating and joining them
+    # back. The registered corpus_shingles query projects it away
+    # to keep the oracle-checked (doc_id, shingle, h) schema.
+    return shingles_with_sizes(_docs_tokenized(spark, sf_dir), n)
 
 
-# The (doc_id, term, tf) corpus aggregate — the third shared artifact:
-# doc_srp_embeddings / corpus_topics / retrieval_triples (and the
-# whole tf-idf family) each recomputed this identical aggregate from
-# their own corpus pass; a production pipeline materializes the
-# posting/tf table once. Keyed like the others; registered as the
-# ``corpus_tf`` query so its build cost is its own accounting line.
-_TF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The (doc_id, term, tf) posting table: doc_srp_embeddings /
+# corpus_topics / retrieval_triples (and the whole tf-idf family) each
+# recomputed this identical aggregate from their own corpus pass; a
+# production pipeline materializes the posting/tf table once.
+@session_artifact(query="corpus_tf")
 def _docs_tf(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _TF_CACHE.get(key)
-    if df is None:
-        from sift_spark.functions.core import tag_tf
+    from sift_spark.functions.core import tag_tf
 
-        df = tag_tf(
-            _docs_tokenized(spark, sf_dir)
-            .select("doc_id", F.explode("toks").alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf")),
-            dataset=sf_dir,
-        ).persist()
-        df.count()  # materialize once; consumers branch from the cache
-        _TF_CACHE[key] = df
-    return df
+    return tag_tf(
+        _docs_tokenized(spark, sf_dir)
+        .select("doc_id", F.explode("toks").alias("term"))
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf")),
+        dataset=sf_dir,
+    )
 
 
-# The verified near-dup pair table at the catalog's standard banding
-# (n=3 shingles, jaccard ≥ 0.8) — the fourth shared artifact (r11):
-# the dedup graph family (clusters, clusters_star, apply,
-# cluster_stats, rate_by_source) each re-ran the IDENTICAL
-# minhash_lsh_pairs build (signature aggregate + band self-join +
-# exact verify) from the shingle artifact. A production dedup
-# pipeline materializes the pair table once and feeds every
-# downstream consumer from it. Registered as the ``dedup_minhash_lsh``
-# query, which bench.py accounts as a COLD artifact line (like the
-# corpus_* lines) so the build cost stays visible.
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# The full-corpus MinHash band table at the same standard banding —
-# the fifth shared artifact (r11): a per-doc aggregate of the shingle
-# artifact, previously rebuilt identically inside the pairs-artifact
-# build, dedup_incremental (both corpus slices) and lsh_recall_probe.
-# Bands are per-doc, so any doc-filtered corpus's band table is a
-# filter of this one. Built lazily by its first consumer — in bench
-# order that is the COLD ``dedup_minhash_lsh`` artifact line, where
-# this cost has always been accounted.
-_BANDS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The full-corpus MinHash band table at the catalog's standard banding
+# (r11): a per-doc aggregate of the shingle artifact, previously
+# rebuilt identically inside the pairs-artifact build,
+# dedup_incremental (both corpus slices) and lsh_recall_probe. Bands
+# are per-doc, so any doc-filtered corpus's band table is a filter of
+# this one. No line of its own: built lazily by its first consumer —
+# in bench order the COLD ``dedup_minhash_lsh`` line, where this cost
+# has always been accounted. r12: lineage-cut like _docs_pairs — the
+# band table is doc-sized but its plan embeds the shingle artifact's
+# builder subtree, re-analyzed by every consumer build (incremental,
+# recall probe, the pairs build). One tiny cache re-read at build,
+# flat-leaf plans everywhere after.
+@session_artifact(cut=True)
 def _docs_bands(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _BANDS_CACHE.get(key)
-    if df is None:
-        from sift_spark.functions.lineage import cut
-        from sift_spark.operators.dedup import minhash_band_table
+    from sift_spark.operators.dedup import minhash_band_table
 
-        df = minhash_band_table(
-            _docs(spark, sf_dir), n=3, sh=_docs_shingles(spark, sf_dir)
-        ).persist()
-        df.count()  # materialize once; consumers branch from the cache
-        # r12: lineage-cut like _docs_pairs — the band table is doc-
-        # sized but its plan embeds the shingle artifact's builder
-        # subtree, re-analyzed by every consumer build (incremental,
-        # recall probe, the pairs build). One tiny cache re-read here,
-        # flat-leaf plans everywhere after.
-        flat = cut(df, eager=True)
-        df.unpersist()
-        _BANDS_CACHE[key] = flat
-        df = flat
-    return df
+    return minhash_band_table(
+        _docs(spark, sf_dir), n=3, sh=_docs_shingles(spark, sf_dir)
+    )
 
 
+# The verified near-dup pair table at the standard banding (n=3
+# shingles, jaccard ≥ 0.8; r11): the dedup graph family (clusters,
+# clusters_star, apply, cluster_stats, rate_by_source) each re-ran the
+# IDENTICAL minhash_lsh_pairs build (signature aggregate + band
+# self-join + exact verify) from the shingle artifact. r12: lineage-
+# cut once at build. The pair table is tiny, but its LOGICAL plan is
+# the whole LSH build — and every consumer re-paid plan-analysis/
+# canonicalization over that embedded subtree on every build
+# (measured ~0.3-0.5 s per query construct at sf0.1). The cut re-reads
+# the just-filled cache (one tiny job, accounted on this artifact's
+# own cold line) and hands consumers a flat leaf.
+@session_artifact(query="dedup_minhash_lsh", cut=True)
 def _docs_pairs(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _PAIRS_CACHE.get(key)
-    if df is None:
-        from sift_spark.functions.lineage import cut
-        from sift_spark.operators.dedup import minhash_lsh_pairs
+    from sift_spark.operators.dedup import minhash_lsh_pairs
 
-        df = minhash_lsh_pairs(
-            _docs(spark, sf_dir), n=3, threshold=0.8,
-            sh=_docs_shingles(spark, sf_dir),
-            bt=_docs_bands(spark, sf_dir),
-        ).persist()
-        df.count()  # materialize once; consumers branch from the cache
-        # r12: truncate the artifact's lineage once at build. The pair
-        # table is tiny (verified near-dup pairs), but its LOGICAL
-        # plan is the whole LSH build — and every consumer
-        # (clusters/apply/stats/star/rate_by_source) re-paid
-        # plan-analysis/canonicalization over that embedded subtree on
-        # every build (measured ~0.3-0.5 s per query construct at
-        # sf0.1). The cut re-reads the just-filled cache (one tiny
-        # job, accounted on this artifact's own cold bench line) and
-        # hands consumers a flat leaf; the now-redundant SQL cache is
-        # dropped. Honors spark.sift.checkpoint=reliable via cut().
-        flat = cut(df, eager=True)
-        df.unpersist()
-        _PAIRS_CACHE[key] = flat
-        df = flat
-    return df
+    return minhash_lsh_pairs(
+        _docs(spark, sf_dir), n=3, threshold=0.8,
+        sh=_docs_shingles(spark, sf_dir),
+        bt=_docs_bands(spark, sf_dir),
+    )
 
 
 class CorpusArtifacts:
     """Public lifecycle handle for one dataset's shared session
-    artifacts (token table, posting/tf table, shingle tables).
+    artifacts (see :data:`sift_spark.caching.ARTIFACTS`).
 
-    The module-level caches build each artifact once per (session,
-    dataset) and hold it persisted for the life of the session — the
-    right default for a pipeline hammering one corpus, but a
-    long-lived session cycling MANY datasets accumulates persisted
-    artifacts with no sanctioned release. This handle is that
-    release: ``corpus_artifacts(spark, sf_dir).release()`` unpersists
-    every artifact built for the dataset and drops the cache entries,
-    so the next query against that dataset simply rebuilds. Releasing
-    one dataset never touches another's artifacts (tested)."""
+    The memo builds each artifact once per (session, dataset) and
+    holds it persisted for the life of the session — the right
+    default for a pipeline hammering one corpus, but a long-lived
+    session cycling MANY datasets needs a sanctioned release:
+    ``corpus_artifacts(spark, sf_dir).release()`` unpersists every
+    artifact built for the dataset, so the next query against that
+    dataset simply rebuilds. Releasing one dataset never touches
+    another's artifacts (tested)."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self._spark = spark
@@ -239,19 +182,9 @@ class CorpusArtifacts:
         return _docs_shingles(self._spark, self._sf_dir, n)
 
     def release(self) -> int:
-        """Unpersist this dataset's artifacts and drop their cache
-        entries; returns the number of artifacts released. Derived
-        artifacts (shingles of any n, tf) go first, the token table
-        last — order only matters for readability; unpersist is safe
-        in any order."""
-        app = self._spark.sparkContext.applicationId
-        released = 0
-        for cache in (_PAIRS_CACHE, _BANDS_CACHE, _SHINGLE_CACHE,
-                      _TF_CACHE, _TOKENS_CACHE):
-            for key in [k for k in cache if k[0] == app and k[1] == self._sf_dir]:
-                cache.pop(key).unpersist()
-                released += 1
-        return released
+        """Unpersist this dataset's artifacts and drop their memo
+        entries; returns the number of artifacts released."""
+        return release_artifacts(self._spark, self._sf_dir)
 
 
 def corpus_artifacts(spark: SparkSession, sf_dir: str) -> CorpusArtifacts:

@@ -61,39 +61,39 @@ def test_feature_base_ignores_untagged_toks(spark):
     assert base == base_tagged
 
 
-def test_corpus_artifacts_release_and_isolation(spark):
+def test_corpus_artifacts_release_and_isolation(spark, tmp_path):
     sf_dir = SF_SMOKE
-    from sift_spark.queries import (
-        _SHINGLE_CACHE,
-        _TF_CACHE,
-        _TOKENS_CACHE,
-        corpus_artifacts,
-    )
+    from sift_spark.queries import QUERIES, corpus_artifacts
 
-    app = spark.sparkContext.applicationId
+    # a second real dataset, with its own artifact built
+    other_dir = str(tmp_path)
+    spark.createDataFrame([(1, "a b c"), (2, "d e")], "doc_id long, text string") \
+        .write.parquet(f"{other_dir}/documents.parquet")
+    other = corpus_artifacts(spark, other_dir)
+    other_toks = other.tokens()
+
     art = corpus_artifacts(spark, sf_dir)
-    toks, tf, sh = art.tokens(), art.tf(), art.shingles()
-    assert toks.storageLevel.useMemory and tf.storageLevel.useMemory
-    assert (app, sf_dir) in _TOKENS_CACHE and (app, sf_dir) in _TF_CACHE
-    assert (app, sf_dir, 3) in _SHINGLE_CACHE
+    try:
+        toks, tf, sh = art.tokens(), art.tf(), art.shingles()
+        assert art.tokens() is toks and art.shingles(3) is sh  # memoized
+        for df in (toks, tf, sh):
+            assert df.storageLevel.useMemory
+        QUERIES["dedup_minhash_lsh"](spark, sf_dir)  # builds the bands and pairs
 
-    # a second dataset handle must not be touched by this release
-    other_key = (app, "/such/other/dataset")
-    _TOKENS_CACHE[other_key] = toks  # sentinel entry, never unpersisted via it
+        assert art.release() == 5  # tokens, tf, shingles, bands, pairs
+        for df in (toks, tf, sh):
+            assert not df.storageLevel.useMemory and not df.storageLevel.useDisk
+        assert other_toks.storageLevel.useMemory  # isolation
+        assert other.tokens() is other_toks
 
-    released = art.release()
-    assert released == 3
-    assert (app, sf_dir) not in _TOKENS_CACHE
-    assert (app, sf_dir) not in _TF_CACHE
-    assert (app, sf_dir, 3) not in _SHINGLE_CACHE
-    assert other_key in _TOKENS_CACHE  # isolation
-    _TOKENS_CACHE.pop(other_key)
-    assert not toks.storageLevel.useMemory and not toks.storageLevel.useDisk
-
-    # rebuild after release works and re-persists
-    toks2 = art.tokens()
-    assert toks2.storageLevel.useMemory
-    assert art.release() == 1
+        # rebuild after release works and re-persists
+        toks2 = art.tokens()
+        assert toks2 is not toks and toks2.storageLevel.useMemory
+        assert art.release() == 1
+    finally:
+        art.release()
+        assert other.release() == 1
+    assert not other_toks.storageLevel.useMemory
 
 
 def test_corpus_accounting_queries_shapes(spark):

@@ -76,6 +76,27 @@ def _jchildren(jnode):
     return [cs.apply(i) for i in range(cs.size())]
 
 
+def plan_nodes(jnode):
+    """Every node of a JVM plan tree, descending into the subplans the
+    tree holds as leaves: AQE's current plan, query stages, and the
+    plans of cached relations (a persisted intermediate's build is part
+    of the query's shape)."""
+    yield jnode
+    cls = jnode.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        kids = [jnode.executedPlan()]
+    elif cls == "InMemoryTableScanExec":
+        kids = [jnode.relation().cachedPlan()]
+    elif cls == "InMemoryRelation":
+        kids = [jnode.cachedPlan()]
+    elif cls.endswith("QueryStageExec"):
+        kids = [jnode.plan()]
+    else:
+        kids = _jchildren(jnode)
+    for k in kids:
+        yield from plan_nodes(k)
+
+
 def _jbounded(jnode) -> bool:
     """Is this physical node's OUTPUT provably small? Limits and
     keyless (1-row) aggregates are; a join is only as bounded as ALL

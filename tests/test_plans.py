@@ -5,6 +5,10 @@ not in a bench eyeball."""
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pytest
+
 from tests.conftest import SF_SMOKE
 
 
@@ -111,6 +115,52 @@ def test_pagerank_joins_are_keyed(spark):
     plan = _plan(entity_pagerank(wikify_links(docs)))
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") == 1
+
+
+# Executed-plan node counts of the comention family at SF_SMOKE, as
+# (ShuffleExchange, SortMergeJoin, BroadcastHashJoin, HashAggregate).
+# Recorded while every builder still wrote its own comention self-join,
+# so the shared edge builders must reproduce each physical shape
+# exactly. The walk includes the plans of persisted intermediates.
+COMENTION_PLAN_PINS = {
+    "entity_pagerank": (60, 10, 12, 98),
+    "entity_hits": (37, 0, 16, 74),
+    "entity_relatedness": (7, 0, 3, 14),
+    "entity_pmi": (10, 0, 3, 20),
+    "comention_triangles": (7, 0, 5, 17),
+    "comention_degrees": (7, 0, 3, 16),
+    "entity_components": (3, 0, 1, 6),
+    "entity_random_walks": (33, 4, 5, 30),
+    "entity_link_prediction": (17, 3, 4, 28),
+    "entity_node2vec_walks": (31, 5, 6, 38),
+}
+
+
+@pytest.mark.parametrize("name", list(COMENTION_PLAN_PINS))
+def test_comention_family_plan_shape(spark, monkeypatch, name):
+    from pyspark.sql import functions as F
+
+    from sift_spark.caching import release_local_caches
+    from sift_spark.corpora.synthetic import wikify_links
+    from sift_spark.models import links as L
+    from sift_spark.operators import dedup
+    from tests.test_plan_audit import plan_nodes
+
+    # entity_components hands its pair table to the driver-gated star
+    # contraction, whose checkpointed output hides the build: pin the
+    # pair table the contraction would receive
+    monkeypatch.setattr(dedup, "duplicate_clusters_star", lambda pairs: pairs.select(
+        F.col("doc1").alias("doc_id"), F.col("doc2").alias("rep_id")))
+    release_local_caches()  # another builder's cached subplan would change the shape
+    try:
+        links = wikify_links(spark.read.parquet(f"{SF_SMOKE}/documents.parquet"))
+        plan = getattr(L, name)(links)._jdf.queryExecution().executedPlan()
+        c = Counter(n.getClass().getSimpleName() for n in plan_nodes(plan))
+    finally:
+        release_local_caches()
+    got = tuple(c[k] for k in ("ShuffleExchangeExec", "SortMergeJoinExec",
+                               "BroadcastHashJoinExec", "HashAggregateExec"))
+    assert got == COMENTION_PLAN_PINS[name]
 
 
 def test_q6_all_predicates_pushed(spark):

@@ -59,36 +59,35 @@ def test_walks_match_python_unroll(spark):
 def test_comention_edges_symmetric(spark):
     """The rewrite's dstdeg == out-degree claim rests on the edge set
     being symmetric; pin that construction property directly."""
-    from pyspark.sql import functions as F
+    from sift_spark.models.links import comention_edges
 
-    links = _links(spark, [("A", "B"), ("B", "C"), ("A", "C")])
-    il = links.select("doc_id", "target").distinct()
-    e = (
-        il.alias("l")
-        .join(il.alias("r"), "doc_id")
-        .where(F.col("l.target") != F.col("r.target"))
-        .select(F.col("l.target").alias("src"), F.col("r.target").alias("dst"))
-        .distinct()
-    )
-    edges = {(r.src, r.dst) for r in e.collect()}
+    links = _links(spark, [("A", "B"), ("B", "C"), ("A", "C"), ("C", "D")])
+    edges = {(r.src, r.dst) for r in comention_edges(links.distinct()).collect()}
     assert edges == {(b, a) for a, b in edges}
+    assert len(edges) == 8 and all(a != b for a, b in edges)
 
 
 def test_walk_plan_has_single_join_per_step(spark):
     """Plan pin: one equi-join per step (walk_len joins + the corpus
     self-join), not two — the old shape carried an extra walks⨝deg
     join per step."""
+    from sift_spark.caching import release_local_caches
     from sift_spark.models.links import entity_random_walks
+    from tests.test_plan_audit import plan_nodes
 
     links = _links(spark, [("A", "B"), ("B", "C")])
     walk_len = 4
-    plan = entity_random_walks(links, walk_len=walk_len)._jdf.queryExecution().optimizedPlan().toString()
-    n_joins = plan.count("Join ")
-    # The adjacency is lazily persisted, so optimizedPlan embeds its
-    # builder subtree (containing the one corpus self-join) at each of
-    # its walk_len+1 references: the single-join-per-step shape reads
-    # walk_len (step joins) + walk_len+1 (embedded) = 2·walk_len+1.
+    try:
+        plan = entity_random_walks(links, walk_len=walk_len)._jdf.queryExecution().optimizedPlan()
+        joins = [n.getClass().getSimpleName() for n in plan_nodes(plan)
+                 if "Join" in n.getClass().getSimpleName()]
+    finally:
+        release_local_caches()
+    # The adjacency is lazily persisted, so the plan walk descends into
+    # its cached builder plan (containing the one corpus self-join) at
+    # each of its walk_len+1 references: the single-join-per-step shape
+    # reads walk_len (step joins) + walk_len+1 (embedded) = 2·walk_len+1.
     # The old two-joins-per-step shape additionally embedded the
     # degree-attach join and its own adj reference per step (≥
     # 4·walk_len), so this bound pins the rewrite.
-    assert n_joins <= 2 * walk_len + 1, f"{n_joins} joins in optimized plan:\n{plan[:2000]}"
+    assert len(joins) <= 2 * walk_len + 1, joins

@@ -77,6 +77,24 @@ def test_table_cache_evicts_dead_sessions(spark, tmp_path):
     assert all(k[0] != "app-dead-123" for k in sio._TABLE_CACHE)
 
 
+def test_artifact_memo_evicts_dead_sessions(spark, tmp_path):
+    """The session-artifact memo drops a dead session's entries at the
+    next lookup, like the table cache above, so a process cycling
+    sessions doesn't keep every stopped session's frames."""
+    from sift_spark import caching
+    from sift_spark.queries import corpus_artifacts
+
+    spark.createDataFrame([(1, "a b")], "doc_id long, text string") \
+        .write.parquet(str(tmp_path / "documents.parquet"))
+    caching._BUILT[("app-dead-123", str(tmp_path), "_docs_tokenized")] = None
+    art = corpus_artifacts(spark, str(tmp_path))
+    try:
+        art.tokens()
+        assert all(k[0] != "app-dead-123" for k in caching._BUILT)
+    finally:
+        assert art.release() == 1
+
+
 def test_shuffle_partitions_for_clamps(tmp_path):
     from sift_spark.session import shuffle_partitions_for
 
