@@ -8,6 +8,10 @@ Artifacts build before timing begins (corpus_tokens/tf/shingles/pairs
 accounting lines are separate in the real bench; here we want the
 marginal per-query number, which is what the warm-min bench line
 reports for artifact consumers).
+
+To time a pinned worktree, run that worktree's own
+``scripts/query_ab.py``: the script inserts its own repo root on
+``sys.path``, so it always times the checkout it lives in.
 """
 
 from __future__ import annotations

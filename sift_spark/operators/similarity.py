@@ -1,22 +1,47 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``ann_topk_bruteforce``: exact cosine top-k — the correctness
-  baseline, O(n²) by construction.
-- ``ann_lsh_topk``: random-hyperplane LSH — vectors are bucketed by
-  an 8-bit signature (sign of dot with 8 fixed planes); candidates
-  are pairs sharing a bucket, so the join is a keyed equi-join that
-  scales out. Recall vs the exact baseline is property-tested.
+Every ANN operator here has the distributed top-k shape: assign
+vectors to cells, take a local top-k per cell or tile with a numpy
+GEMM inside a cogrouped Arrow batch, then merge globally with one
+per-vector window. Each step has one implementation:
 
-The plane matrix is a deterministic constant
-(:data:`sift_spark.functions.core.LSH_PLANES`) embedded identically
-in the DuckDB oracle, so even the approximate operator is
-hash-checkable across engines.
+- ``_nearest_cells``: map-side nearest-cell ranking against a
+  centroid matrix, (vec_id, cluster, rn) rows. Used by ``ann_ivf_topk``,
+  ``ivf_pq_topk``, both ``*_query_index`` probes and
+  ``kmeans_clusters``.
+- ``_cogroup_topk``: per-cell exact-cosine GEMM top-k (with an
+  optional same-bucket mask for supergrouped LSH buckets);
+  ``_cogroup_adc_topk`` is its PQ twin (asymmetric distance).
+- ``_tile_sims``: block-tiled all-pairs GEMM for the exact operators;
+  ``_tile_topk`` is its per-vector top-k (``ann_topk_bruteforce`` and
+  everything built on it, ``hard_negatives`` with a label mask), and
+  ``dedup.embedding_dup_pairs`` thresholds it.
+- ``_topk_rows`` (in-kernel) and ``_topk_window`` (global) rank by
+  (6dp metric best-first, neighbor_id asc): the cross-engine total
+  order.
+- ``_probe_index``, ``_write_centroids`` and ``_recall_report``: the
+  serving-index probe, the member-mean codebook build and the recall
+  audit tail.
+
+The operators are exact brute force (``ann_topk_bruteforce``), IVF
+(``ann_ivf_topk``, ``ivf_write_index``/``ivf_query_index``), IVF-PQ
+(``ivf_pq_topk``, ``ivfpq_write_index``/``ivfpq_query_index``),
+multi-table hyperplane LSH (``ann_lsh_topk``: by default ``LSH_TABLES``
+= 4 tables of ``LSH_BITS`` = 6-bit signatures, OR-ed), their recall
+reports, and the curation and labelling operators built on them
+(k-means, hard negatives, label propagation, outliers, PQ/int8 codes,
+PCA, normalization).
+
+Every codebook and plane matrix is a deterministic constant
+(:mod:`sift_spark.functions.core`) embedded identically in the DuckDB
+oracle, so even the approximate operators are hash-checkable across
+engines.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sift_spark.functions.core import LSH_PLANES
@@ -93,48 +118,20 @@ def _topk_rows(S, mids, kk, largest=True, valid=None):
     return ii[keep].astype("int64"), jj[keep].astype("int64"), r[keep]
 
 
-def cosine_pairs_col() -> Column:
-    """Vectorized cosine over two array columns ``a_emb``/``b_emb``
-    (Arrow batch → one numpy einsum per batch, 6dp HALF_UP rounding).
-    Replaces the per-pair `aggregate(zip_with(...))` expression, which
-    is evaluated element-at-a-time outside codegen (measured ~10×
-    slower on 64-dim vectors)."""
-
-    @F.pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.stack(a.to_numpy()).astype("float64")
-        B = np.stack(b.to_numpy()).astype("float64")
-        s = np.einsum("ij,ij->i", A, B) / (
-            np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        )
-        return pd.Series(round6_half_away(s))
-
-    return _cos(F.col("a_emb"), F.col("b_emb"))
+def _topk_window(scored: DataFrame, k: int, metric: str = "sim",
+                 largest: bool = True) -> DataFrame:
+    """Global per-vector top-``k``: ``rank`` = row_number over vec_id
+    by (``metric`` best-first, neighbor_id asc), kept while ≤ ``k``.
+    That order is the cross-engine total order every oracle twin
+    ranks by; the local top-k kernels (:func:`_topk_rows`) cut with
+    the same order, so merging their survivors is exact."""
+    m = F.col(metric).desc() if largest else F.col(metric).asc()
+    w = Window.partitionBy("vec_id").orderBy(m, F.col("neighbor_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def _score_candidates(cand: DataFrame, emb: DataFrame, k: int) -> DataFrame:
-    """Join candidate (vec_id, neighbor_id) pairs back to their
-    embeddings and take exact-cosine top-k per query vector. The two
-    equi-joins shuffle on vec_id — the natural key — and the cosine
-    itself is one Arrow-batched GEMM pass."""
-    e = emb.select("vec_id", "embedding")
-    pairs = (
-        cand.join(e.select("vec_id", F.col("embedding").alias("a_emb")), "vec_id")
-        .join(
-            e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("b_emb")),
-            "neighbor_id",
-        )
-        .select("vec_id", "neighbor_id", cosine_pairs_col().alias("sim"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return pairs.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def _cogroup_topk(q_side: DataFrame, m_side: DataFrame, key: str, k: int) -> DataFrame:
+def _cogroup_topk(q_side: DataFrame, m_side: DataFrame, key: str, k: int,
+                  same: str | None = None) -> DataFrame:
     """Per-bucket exact-cosine local top-k via cogrouped GEMM:
     ``q_side`` (key, vec_id, embedding) × ``m_side`` (key, neighbor_id,
     embedding) → (vec_id, neighbor_id, sim) rows, at most ``k`` per
@@ -145,7 +142,16 @@ def _cogroup_topk(q_side: DataFrame, m_side: DataFrame, key: str, k: int) -> Dat
     ANN: embeddings travel once per bucket membership, the |Q|×|M|
     pair math stays inside one numpy kernel per bucket, and only
     top-k survivors leave. Skewed buckets cost a bigger GEMM tile,
-    not a bigger shuffle."""
+    not a bigger shuffle.
+
+    ``same`` names a column both sides carry when ``key`` is a
+    SUPERGROUP of many buckets (high-bit LSH tables: thousands of
+    mostly-singleton buckets would otherwise pay one Python/Arrow
+    invocation each): pairs with unequal ``same`` values are masked
+    inside the kernel, so candidate semantics equal per-bucket
+    cogrouping. Per (query, supergroup) top-k is a safe pruning: a
+    query's global top-k candidates each live in some supergroup's
+    top-k."""
     import numpy as np
     import pandas as pd
 
@@ -160,6 +166,8 @@ def _cogroup_topk(q_side: DataFrame, m_side: DataFrame, key: str, k: int) -> Dat
         mids = r["neighbor_id"].to_numpy()
         qn = np.sqrt((Q * Q).sum(axis=1))
         mn = np.sqrt((M * M).sum(axis=1))
+        if same is not None:
+            qb, mb = l[same].to_numpy(), r["__msame"].to_numpy()
         # strip-mined GEMM (see _tile_sims: skewed buckets would
         # otherwise materialize a full |Q|×|M| score matrix) +
         # vectorized exact top-k (see _topk_rows); rounding happens on
@@ -170,10 +178,10 @@ def _cogroup_topk(q_side: DataFrame, m_side: DataFrame, key: str, k: int) -> Dat
         outs = []
         for lo in range(0, Q.shape[0], strip):
             S = (Q[lo:lo + strip] @ M.T) / np.outer(qn[lo:lo + strip], mn)
-            ii, jj, sims = _topk_rows(
-                S, mids, kk,
-                valid=qids[lo:lo + strip, None] != mids[None, :],
-            )
+            valid = qids[lo:lo + strip, None] != mids[None, :]
+            if same is not None:
+                valid &= np.equal.outer(qb[lo:lo + strip], mb)
+            ii, jj, sims = _topk_rows(S, mids, kk, valid=valid)
             outs.append(pd.DataFrame(
                 {
                     "vec_id": qids[lo:lo + strip][ii].astype("int64"),
@@ -189,6 +197,8 @@ def _cogroup_topk(q_side: DataFrame, m_side: DataFrame, key: str, k: int) -> Dat
     m2 = m_side.withColumnRenamed(key, "__mkey").withColumnRenamed(
         "embedding", "__memb"
     )
+    if same is not None:
+        m2 = m2.withColumnRenamed(same, "__msame")
     return (
         q_side.groupby(key)
         .cogroup(m2.groupby("__mkey"))
@@ -309,7 +319,8 @@ def lsh_bucket_table(emb: DataFrame, planes=None) -> DataFrame:
     return emb.select("vec_id", "embedding").mapInPandas(sigs, "vec_id long, t int, bucket int")
 
 
-def _tile_sims(emb: DataFrame, n_blocks: int, emit) -> DataFrame:
+def _tile_sims(emb: DataFrame, n_blocks: int, emit,
+               label: str | None = None) -> DataFrame:
     """All-pairs cosine via block-tiled GEMM.
 
     Vectors are hashed into ``n_blocks`` row-blocks; each (left-block,
@@ -322,21 +333,25 @@ def _tile_sims(emb: DataFrame, n_blocks: int, emit) -> DataFrame:
 
     ``emit(key, S, lids, rids)`` → (vec_id, neighbor_id, sim) rows to
     keep from a tile's similarity matrix S (lets callers do per-tile
-    top-k or thresholding before anything is shuffled back).
+    top-k or thresholding before anything is shuffled back). When
+    ``label`` names a column, it rides into every tile and ``emit``
+    also gets the row-aligned left and right labels.
     """
     import pandas as pd  # noqa: F401 (applyInPandas requirement)
 
     spark = emb.sparkSession
-    left = (
-        emb.select(F.col("vec_id").alias("lid"), F.col("embedding").alias("lemb"))
-        .withColumn("lb", F.col("lid") % n_blocks)
-        .crossJoin(F.broadcast(spark.range(n_blocks).select(F.col("id").cast("long").alias("rb"))))
-    )
-    right = (
-        emb.select(F.col("vec_id").alias("rid"), F.col("embedding").alias("remb"))
-        .withColumn("rb", F.col("rid") % n_blocks)
-        .crossJoin(F.broadcast(spark.range(n_blocks).select(F.col("id").cast("long").alias("lb"))))
-    )
+
+    def side(s: str, other: str) -> DataFrame:
+        cols = [F.col("vec_id").alias(f"{s}id"), F.col("embedding").alias(f"{s}emb")]
+        if label is not None:
+            cols.append(F.col(label).alias(f"{s}lab"))
+        return (
+            emb.select(*cols)
+            .withColumn(f"{s}b", F.col(f"{s}id") % n_blocks)
+            .crossJoin(F.broadcast(
+                spark.range(n_blocks).select(F.col("id").cast("long").alias(f"{other}b"))
+            ))
+        )
 
     def tile(key, l, r):
         import numpy as np
@@ -349,6 +364,7 @@ def _tile_sims(emb: DataFrame, n_blocks: int, emit) -> DataFrame:
         L = L / np.linalg.norm(L, axis=1, keepdims=True)
         R = R / np.linalg.norm(R, axis=1, keepdims=True)
         lids, rids = l["lid"].to_numpy(), r["rid"].to_numpy()
+        labs = (l["llab"].to_numpy(), r["rlab"].to_numpy()) if label is not None else None
         # strip-mine the tile: a full |L|×|R| similarity matrix is
         # hundreds of MB per task and every concurrent worker pays the
         # DRAM round trip for cells the emit immediately discards
@@ -357,17 +373,44 @@ def _tile_sims(emb: DataFrame, n_blocks: int, emit) -> DataFrame:
         # strip, so per-strip emission ≡ per-tile emission for every
         # emit (threshold filters and per-row top-k alike).
         strip = max(128, _GEMM_STRIP_CELLS // max(1, R.shape[0]))
-        outs = [
-            emit(key, L[lo:lo + strip] @ R.T, lids[lo:lo + strip], rids)
-            for lo in range(0, L.shape[0], strip)
-        ]
+        outs = []
+        for lo in range(0, L.shape[0], strip):
+            rows = slice(lo, lo + strip)
+            extra = (labs[0][rows], labs[1]) if labs else ()
+            outs.append(emit(key, L[rows] @ R.T, lids[rows], rids, *extra))
         return outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
 
     return (
-        left.groupby("lb", "rb")
-        .cogroup(right.groupby("lb", "rb"))
+        side("l", "r").groupby("lb", "rb")
+        .cogroup(side("r", "l").groupby("lb", "rb"))
         .applyInPandas(tile, schema="vec_id long, neighbor_id long, sim double")
     )
+
+
+def _tile_topk(emb: DataFrame, k: int, n_blocks: int,
+               label: str | None = None) -> DataFrame:
+    """Exact cosine top-k per vector over the block-tiled GEMM:
+    per-tile top-k inside the kernel (so only n_blocks·k candidates
+    per vector are shuffled), then the global :func:`_topk_window`.
+    Excludes self-pairs or, with ``label``, every same-label pair
+    (the hard-negative mask, which covers self-pairs too)."""
+
+    def emit(key, S, lids, rids, llab=None, rlab=None):
+        import pandas as pd
+
+        # vectorized exact per-tile top-k on ROUNDED sims (total order
+        # sim desc, neighbor asc — agrees with the oracle's global
+        # ranking); see _topk_rows. Survivors-only rounding.
+        if label is None:
+            valid = lids[:, None] != rids[None, :]
+        else:
+            valid = llab[:, None] != rlab[None, :]
+        ii, jj, sims = _topk_rows(S, rids, k, valid=valid)
+        return pd.DataFrame(
+            {"vec_id": lids[ii], "neighbor_id": rids[jj], "sim": sims}
+        )
+
+    return _topk_window(_tile_sims(emb, n_blocks, emit, label), k)
 
 
 def ann_topk_bruteforce(emb: DataFrame, k: int = 5, n_blocks: int = 8) -> DataFrame:
@@ -376,24 +419,8 @@ def ann_topk_bruteforce(emb: DataFrame, k: int = 5, n_blocks: int = 8) -> DataFr
 
     Per-tile top-k is taken inside the GEMM kernel (so only
     n_blocks·k candidates per vector are shuffled), then the global
-    top-k is a per-vector window."""
-
-    def emit(key, S, lids, rids):
-        import pandas as pd
-
-        # vectorized exact per-tile top-k on ROUNDED sims (total order
-        # sim desc, neighbor asc — agrees with the oracle's global
-        # ranking); see _topk_rows. Survivors-only rounding.
-        ii, jj, sims = _topk_rows(
-            S, rids, k, valid=lids[:, None] != rids[None, :]
-        )
-        return pd.DataFrame(
-            {"vec_id": lids[ii], "neighbor_id": rids[jj], "sim": sims}
-        )
-
-    pairs = _tile_sims(emb, n_blocks, emit)
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return pairs.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    top-k is a per-vector window (:func:`_tile_topk`)."""
+    return _tile_topk(emb, k, n_blocks)
 
 
 def knn_label_propagation(emb: DataFrame, k: int = 5, n_blocks: int = 8) -> DataFrame:
@@ -423,6 +450,45 @@ def knn_label_propagation(emb: DataFrame, k: int = 5, n_blocks: int = 8) -> Data
     )
 
 
+def _nearest_cells(emb: DataFrame, C, nprobe: int, cids=None) -> DataFrame:
+    """Each vector's ``nprobe`` nearest cells of the centroid matrix
+    ``C`` (n_cells × D): (vec_id, cluster, rn) rows, rn = 1 the
+    nearest. ``cids`` maps centroid rows to cell ids (default: the row
+    index). All distances come from one numpy GEMM per Arrow batch,
+    map-side — no crossJoin and no rank-window shuffle. argmin of
+    squared distance = argmin of (-2 v·c + |c|²); the stable argsort
+    breaks distance ties toward the lower centroid row, matching the
+    oracle's ORDER BY d, cid. ``nprobe`` beyond the cell count probes
+    every cell."""
+    import numpy as np
+    import pandas as pd
+
+    C = np.asarray(C, dtype="float64")
+    n2 = (C * C).sum(axis=1)
+    cids = np.arange(len(C), dtype="int32") if cids is None else cids
+    p = min(nprobe, len(C))
+
+    def nearest(it):
+        for pdf in it:
+            n = len(pdf)
+            if n == 0:
+                continue
+            E = np.stack(pdf["embedding"].to_numpy()).astype("float64")
+            D = -2.0 * (E @ C.T) + n2
+            order = np.argsort(D, axis=1, kind="stable")[:, :p]
+            yield pd.DataFrame(
+                {
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), p),
+                    "cluster": cids[order.reshape(-1)],
+                    "rn": np.tile(np.arange(1, p + 1, dtype="int32"), n),
+                }
+            )
+
+    return emb.select("vec_id", "embedding").mapInPandas(
+        nearest, "vec_id long, cluster int, rn int"
+    )
+
+
 def ann_ivf_topk(emb: DataFrame, k: int = 5, nprobe: int = 2,
                  n_cells: int | None = None) -> DataFrame:
     """IVF-style ANN: vectors are assigned to their nearest coarse-
@@ -442,46 +508,18 @@ def ann_ivf_topk(emb: DataFrame, k: int = 5, nprobe: int = 2,
     so a FIXED codebook on growing data degrades quadratically —
     keep n_cells ≈ nprobe·√N. None keeps the 16-cell oracle default.
     """
-    import numpy as np
-    import pandas as pd
-
+    from sift_spark.caching import local_persist
     from sift_spark.functions.core import IVF_N_CELLS, ivf_centroids
-
-    C = np.array(ivf_centroids(n_cells or IVF_N_CELLS), dtype="float64")  # (n_cells, D)
-    n2 = (C * C).sum(axis=1)
-
-    def rank_cells(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            # argmin of squared distance = argmin of (-2 v·c + |c|²);
-            # stable argsort breaks distance ties on cid ascending,
-            # matching the oracle's ORDER BY d, cid
-            D = -2.0 * (E @ C.T) + n2
-            order = np.argsort(D, axis=1, kind="stable")[:, :nprobe]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), nprobe),
-                    "cid": order.reshape(-1).astype("int32"),
-                    "rn": np.tile(np.arange(1, nprobe + 1, dtype="int32"), n),
-                }
-            )
 
     # persist: ranked feeds BOTH the assignment and the probe list —
     # unpersisted, the whole Arrow scan + GEMM chain runs twice
-    from sift_spark.caching import local_persist
-
     ranked = local_persist(  # materialize: assign + probes race the Arrow chain
-        emb.select("vec_id", "embedding").mapInPandas(
-            rank_cells, "vec_id long, cid int, rn int"
-        )
+        _nearest_cells(emb, ivf_centroids(n_cells or IVF_N_CELLS), nprobe)
     )
     assign = ranked.where(F.col("rn") == 1).select(
-        F.col("vec_id").alias("neighbor_id"), "cid"
+        F.col("vec_id").alias("neighbor_id"), "cluster"
     )
-    probes = ranked.where(F.col("rn") <= nprobe).select("vec_id", "cid")
+    probes = ranked.where(F.col("rn") <= nprobe).select("vec_id", "cluster")
     # scoring is per-CELL GEMM, not per-pair joins: materializing the
     # (query, member) candidate pairs and joining embeddings onto both
     # sides shuffles O(candidates·D) — measured 19s of a 22s sf1 run
@@ -495,68 +533,7 @@ def ann_ivf_topk(emb: DataFrame, k: int = 5, nprobe: int = 2,
     m_side = assign.join(
         e.select(F.col("vec_id").alias("neighbor_id"), "embedding"), "neighbor_id"
     )
-    celled = _cogroup_topk(q_side, m_side, "cid", k)
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return celled.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def _cogroup_topk_masked(q_side: DataFrame, m_side: DataFrame, k: int) -> DataFrame:
-    """Like ``_cogroup_topk`` but cogrouped on a SUPERGROUP key
-    (``skey``) holding many LSH buckets, with the same-bucket
-    constraint enforced inside the kernel via an equality mask — so
-    high-bit LSH tables (thousands of mostly-singleton buckets) don't
-    pay one Python/Arrow invocation per bucket. Candidate semantics
-    are identical to per-bucket cogrouping: masked pairs never score.
-    Per (query, supergroup) top-k is kept (a safe pruning: a query's
-    global top-k candidates each live in some supergroup's top-k)."""
-    import numpy as np
-    import pandas as pd
-
-    def fn(_key, l, r):
-        if len(l) == 0 or len(r) == 0:
-            return pd.DataFrame({"vec_id": [], "neighbor_id": [], "sim": []}).astype(
-                {"vec_id": "int64", "neighbor_id": "int64", "sim": "float64"}
-            )
-        Q = np.stack(l["embedding"].to_numpy()).astype("float64")
-        M = np.stack(r["__memb"].to_numpy()).astype("float64")
-        qids = l["vec_id"].to_numpy()
-        mids = r["neighbor_id"].to_numpy()
-        qb = l["bkey"].to_numpy()
-        mb = r["__mbkey"].to_numpy()
-        qn = np.sqrt((Q * Q).sum(axis=1))
-        mn = np.sqrt((M * M).sum(axis=1))
-        # strip-mined GEMM (see _tile_sims) with the same-bucket
-        # constraint + self-exclusion as one validity mask; vectorized
-        # exact top-k per strip (see _topk_rows)
-        kk = min(k, len(mids))
-        strip = max(128, _GEMM_STRIP_CELLS // max(1, M.shape[0]))
-        outs = []
-        for lo in range(0, Q.shape[0], strip):
-            S = (Q[lo:lo + strip] @ M.T) / np.outer(qn[lo:lo + strip], mn)
-            ii, jj, sims = _topk_rows(
-                S, mids, kk,
-                valid=np.equal.outer(qb[lo:lo + strip], mb)
-                & (qids[lo:lo + strip, None] != mids[None, :]),
-            )
-            outs.append(pd.DataFrame(
-                {
-                    "vec_id": qids[lo:lo + strip][ii].astype("int64"),
-                    "neighbor_id": mids[jj].astype("int64"),
-                    "sim": sims,
-                }
-            ))
-        return outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
-
-    m2 = m_side.withColumnRenamed("skey", "__mskey").withColumnRenamed(
-        "embedding", "__memb"
-    ).withColumnRenamed("bkey", "__mbkey")
-    return (
-        q_side.groupby("skey")
-        .cogroup(m2.groupby("__mskey"))
-        .applyInPandas(fn, "vec_id long, neighbor_id long, sim double")
-    )
+    return _topk_window(_cogroup_topk(q_side, m_side, "cluster", k), k)
 
 
 def ann_lsh_topk(emb: DataFrame, k: int = 5, n_tables: int | None = None,
@@ -589,6 +566,7 @@ def ann_lsh_topk(emb: DataFrame, k: int = 5, n_tables: int | None = None,
     e = emb.select("vec_id", "embedding")
     keyed = bt.select("vec_id", bkey).join(e, "vec_id")
     n_buckets = (n_tables or 4) * (1 << (n_bits or 6))
+    key = "bkey"
     if n_buckets > 512:
         # high-bit tables: thousands of mostly-singleton buckets would
         # pay one Python/Arrow call each — supergroup them and mask
@@ -596,25 +574,12 @@ def ann_lsh_topk(emb: DataFrame, k: int = 5, n_tables: int | None = None,
         # each GEMM tile ~L·N/256 rows; at larger N raise the divisor
         # with N to hold the tile near a few thousand rows.
         keyed = keyed.withColumn("skey", F.col("bkey") % 256)
-        q_side = keyed
-        m_side = keyed.select(
-            F.col("vec_id").alias("neighbor_id"), "bkey", "skey", "embedding"
-        )
-        local = _cogroup_topk_masked(q_side, m_side, k).dropDuplicates(
-            ["vec_id", "neighbor_id"]
-        )
-    else:
-        q_side = keyed
-        m_side = keyed.select(
-            F.col("vec_id").alias("neighbor_id"), "bkey", "embedding"
-        )
-        local = _cogroup_topk(q_side, m_side, "bkey", k).dropDuplicates(
-            ["vec_id", "neighbor_id"]
-        )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return local.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+        key = "skey"
+    local = _cogroup_topk(
+        keyed, keyed.withColumnRenamed("vec_id", "neighbor_id"), key, k,
+        same="bkey" if key == "skey" else None,
+    ).dropDuplicates(["vec_id", "neighbor_id"])
+    return _topk_window(local, k)
 
 
 def kmeans_clusters(emb: DataFrame, n_iter: int = 2,
@@ -640,26 +605,8 @@ def kmeans_clusters(emb: DataFrame, n_iter: int = 2,
 
     from sift_spark.functions.core import IVF_CENTROIDS, ivf_centroids
 
-    def assign(cids: "np.ndarray", C: "np.ndarray") -> DataFrame:
-        n2 = (C * C).sum(axis=1)
-
-        def go(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                E = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-                D = -2.0 * (E @ C.T) + n2
-                j = np.argsort(D, axis=1, kind="stable")[:, 0]
-                yield pd.DataFrame(
-                    {"vec_id": pdf["vec_id"].to_numpy(), "cluster": cids[j]}
-                )
-
-        return emb.select("vec_id", "embedding").mapInPandas(
-            go, "vec_id long, cluster int"
-        )
-
     def member_sums(cids: "np.ndarray", C: "np.ndarray") -> DataFrame:
-        # same distance + tie rule as ``assign`` (the two passes must
+        # same distance + tie rule as _nearest_cells (the two passes must
         # agree on every vector), but instead of emitting one row per
         # vector it reduces each task's batch stream to ≤k partial
         # (cluster, count, Σembedding) rows. The per-round
@@ -698,7 +645,6 @@ def kmeans_clusters(emb: DataFrame, n_iter: int = 2,
     seed = ivf_centroids(n_cells) if n_cells else IVF_CENTROIDS
     cids = np.arange(len(seed), dtype="int32")
     C = np.array(seed, dtype="float64")
-    a = assign(cids, C)
     for _ in range(n_iter):
         parts = member_sums(cids, C).collect()
         cnt_by: dict[int, int] = {}
@@ -715,8 +661,7 @@ def kmeans_clusters(emb: DataFrame, n_iter: int = 2,
             break
         cids = np.array(sorted(cnt_by), dtype="int32")
         C = np.stack([sum_by[c] / cnt_by[c] for c in cids])
-        a = assign(cids, C)
-    return a
+    return _nearest_cells(emb, C, 1, cids).select("vec_id", "cluster")
 
 
 def pq_codes(emb: DataFrame) -> DataFrame:
@@ -781,63 +726,33 @@ def ivf_pq_topk(emb: DataFrame, k: int = 5, nprobe: int = 2,
     property-tested; the ADC math itself is deterministic given the
     literal codebooks, so since r9 the op is ALSO hash-checked against
     a DuckDB twin (LUT-join ADC, oracle_ops._ivfpq_topk_oracle)."""
-    import numpy as np
-    import pandas as pd
-
-    from sift_spark.functions.core import IVF_N_CELLS, ivf_centroids
-
-    IC = np.array(ivf_centroids(n_cells or IVF_N_CELLS), dtype="float64")
-    icn2 = (IC * IC).sum(axis=1)
-
-    def rank_cells(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            D = -2.0 * (E @ IC.T) + icn2
-            # clamp: nprobe larger than the codebook must probe every
-            # cell, not crash the repeat/tile length match
-            p = min(nprobe, D.shape[1])
-            order = np.argsort(D, axis=1, kind="stable")[:, :p]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), p),
-                    "cid": order.reshape(-1).astype("int32"),
-                    "rn": np.tile(np.arange(1, p + 1, dtype="int32"), n),
-                }
-            )
-
-    # ranked feeds BOTH the assignment (rn=1) and the probe set — a
-    # tiny (vec_id, cid, rn) table; persisting it halves the corpus
-    # scans + python GEMM passes. MEMORY_ONLY deliberately: the caller
-    # can't unpersist (the result is lazy), so long sessions running
-    # many probes accumulate these blocks — memory-only blocks are
-    # LRU-evicted (eviction = recompute) and never pile up on disk.
     from pyspark import StorageLevel
 
     from sift_spark.caching import local_persist
+    from sift_spark.functions.core import IVF_N_CELLS, ivf_centroids
 
-    # registered builder-local cache (r12): released between bench
-    # reps; MEMORY_ONLY keeps the LRU-eviction policy for sessions
-    # that never release
+    # ranked feeds BOTH the assignment (rn=1) and the probe set — a
+    # tiny (vec_id, cluster, rn) table; persisting it halves the corpus
+    # scans + python GEMM passes. Registered builder-local cache:
+    # released between bench reps. MEMORY_ONLY deliberately: a session
+    # that never releases accumulates these blocks, and memory-only
+    # blocks are LRU-evicted (eviction = recompute), never piled up on
+    # disk.
     ranked = local_persist(
-        emb.select("vec_id", "embedding").mapInPandas(
-            rank_cells, "vec_id long, cid int, rn int"
-        ),
+        _nearest_cells(emb, ivf_centroids(n_cells or IVF_N_CELLS), nprobe),
         eager=False,
         level=StorageLevel.MEMORY_ONLY,
     )
     codes = pq_codes(emb)
     assign = ranked.where(F.col("rn") == 1).select(
-        F.col("vec_id").alias("neighbor_id"), "cid"
+        F.col("vec_id").alias("neighbor_id"), "cluster"
     ).join(codes.select(F.col("vec_id").alias("neighbor_id"), "codes"), "neighbor_id")
-    q_side = ranked.select("vec_id", "cid").join(
+    q_side = ranked.select("vec_id", "cluster").join(
         emb.select("vec_id", "embedding"), "vec_id"
     )
-    scored = _cogroup_adc_topk(q_side, assign, "cid", k)
-    w = Window.partitionBy("vec_id").orderBy(F.col("adc_dist").asc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _topk_window(
+        _cogroup_adc_topk(q_side, assign, "cluster", k), k, "adc_dist", largest=False
+    )
 
 
 def embedding_outliers(emb: DataFrame, z_max: float = 2.0) -> DataFrame:
@@ -938,6 +853,24 @@ def _auto_n_cells(emb: DataFrame, n_cells: int | None) -> int | None:
     return max(16, auto) if n > 256 else None
 
 
+def _write_centroids(cells: DataFrame, path: str) -> None:
+    """Write ``{path}/centroids``: each cluster's member mean over the
+    (cluster, embedding) rows of ``cells``, dimensions in order — the
+    trained codebook both persisted indexes probe with."""
+    (
+        cells.select("cluster", F.posexplode("embedding").alias("dim", "x"))
+        .groupBy("cluster", "dim")
+        .agg(F.avg("x").alias("m"))
+        .groupBy("cluster")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "m"))),
+                lambda s: s["m"],
+            ).alias("centroid")
+        )
+    ).write.mode("overwrite").parquet(f"{path}/centroids")
+
+
 def ivf_write_index(emb: DataFrame, path: str, n_iter: int = 2,
                     n_cells: int | None = None) -> None:
     """Train and persist an IVF index: ``{path}/cells`` holds the
@@ -962,38 +895,29 @@ def ivf_write_index(emb: DataFrame, path: str, n_iter: int = 2,
     cells = emb.select("vec_id", "embedding").join(clusters, "vec_id").persist()
     try:
         cells.write.mode("overwrite").partitionBy("cluster").parquet(f"{path}/cells")
-        cent = (
-            cells.select("cluster", F.posexplode("embedding").alias("dim", "x"))
-            .groupBy("cluster", "dim")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                    lambda s: s["m"],
-                ).alias("centroid")
-            )
-        )
-        cent.write.mode("overwrite").parquet(f"{path}/centroids")
+        _write_centroids(cells, path)
     finally:
         cells.unpersist()
 
 
-def ivf_query_index(spark, queries: DataFrame, path: str,
-                    k: int = 5, nprobe: int = 2) -> DataFrame:
-    """Probe a persisted IVF index: (vec_id, neighbor_id, sim, rank)
-    exact-cosine top-k within each query's ``nprobe`` nearest cells.
+def _probe_index(spark, queries: DataFrame, path: str,
+                 nprobe: int) -> tuple[DataFrame, DataFrame]:
+    """The probe both persisted-index queries share: (q_side, cells)
+    with q_side the (vec_id, cluster, embedding) probe rows and cells
+    the index's ``{path}/cells`` scan cut to the probed partitions.
 
     The codebook (k×D) is driver-resident — the same thing every ANN
-    serving system holds in memory; cell ranking is one numpy GEMM
-    per Arrow batch. The probed cell ids are collected (≤ n_cells
-    ints) and pushed as a static partition filter, so the cells scan
-    reads ONLY the probed partitions. Centroids are sorted by cluster
-    id so distance TIES break toward the lower cell deterministically
+    serving system holds in memory; cell ranking is
+    :func:`_nearest_cells`. Centroids are sorted by cluster id so
+    distance TIES break toward the lower cell deterministically
     (parquet collect order is arbitrary; the stable argsort follows
-    row order)."""
+    row order). The probed cell ids are collected (≤ n_cells ints)
+    and pushed as a static partition filter, so the cells scan reads
+    ONLY the probed partitions."""
     import numpy as np
-    import pandas as pd
+    from pyspark import StorageLevel
+
+    from sift_spark.caching import local_persist
 
     cents = sorted(
         spark.read.parquet(f"{path}/centroids").collect(),
@@ -1001,55 +925,39 @@ def ivf_query_index(spark, queries: DataFrame, path: str,
     )
     cids = np.array([r["cluster"] for r in cents], dtype="int32")
     C = np.stack([np.array(r["centroid"], dtype="float64") for r in cents])
-    n2 = (C * C).sum(axis=1)
-
-    def rank_cells(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            D = -2.0 * (E @ C.T) + n2
-            # clamp: nprobe beyond the trained cell count probes all
-            p = min(nprobe, D.shape[1])
-            order = np.argsort(D, axis=1, kind="stable")[:, :p]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), p),
-                    "cluster": cids[order.reshape(-1)],
-                }
-            )
-
-    # MEMORY_ONLY: same bounded-cache policy as ivf_pq_topk's ranked
-    # table — probe tables from long serving sessions LRU-evict
+    # registered builder-local cache with ivf_pq_topk's MEMORY_ONLY
+    # policy: probe tables from long serving sessions LRU-evict
     # (eviction = recompute) instead of accumulating on disk
-    from pyspark import StorageLevel
-
-    from sift_spark.caching import local_persist
-
-    # registered builder-local cache (r12) — see ivf_pq_topk's ranked
     probes = local_persist(
-        queries.select("vec_id", "embedding").mapInPandas(
-            rank_cells, "vec_id long, cluster int"
-        ),
+        _nearest_cells(queries, C, nprobe, cids),
         eager=False,
         level=StorageLevel.MEMORY_ONLY,
     )
     probed = sorted(r["cluster"] for r in probes.select("cluster").distinct().collect())
     cells = spark.read.parquet(f"{path}/cells").where(F.col("cluster").isin(probed))
+    q_side = probes.select("vec_id", "cluster").join(
+        queries.select("vec_id", "embedding"), "vec_id"
+    )
+    return q_side, cells
+
+
+def ivf_query_index(spark, queries: DataFrame, path: str,
+                    k: int = 5, nprobe: int = 2) -> DataFrame:
+    """Probe a persisted IVF index: (vec_id, neighbor_id, sim, rank)
+    exact-cosine top-k within each query's ``nprobe`` nearest cells
+    (:func:`_probe_index`: static partition pruning on the probed
+    cells, deterministic centroid tie-breaks)."""
+    q_side, cells = _probe_index(spark, queries, path, nprobe)
     # scoring is the per-CELL GEMM cogroup, not per-pair joins — the
     # same lesson ann_ivf_topk carries: materializing (query, member)
     # pair rows with both embeddings shuffles O(candidates·D) and the
     # r9 sf1 A/B measured the join form at 65s where this shape takes
     # ~3s. Embeddings travel once per probe; per-cell local top-k rows
     # merge into the exact global top-k (a member lives in one cell).
-    q_side = probes.join(queries.select("vec_id", "embedding"), "vec_id")
     m_side = cells.select(
         F.col("vec_id").alias("neighbor_id"), "embedding", "cluster"
     )
-    celled = _cogroup_topk(q_side, m_side, "cluster", k)
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return celled.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _topk_window(_cogroup_topk(q_side, m_side, "cluster", k), k)
 
 
 def ivfpq_write_index(emb: DataFrame, path: str, n_iter: int = 2,
@@ -1068,21 +976,7 @@ def ivfpq_write_index(emb: DataFrame, path: str, n_iter: int = 2,
     try:
         cells = pq_codes(emb).join(clusters, "vec_id")
         cells.write.mode("overwrite").partitionBy("cluster").parquet(f"{path}/cells")
-        cent = (
-            emb.select("vec_id", "embedding")
-            .join(clusters, "vec_id")
-            .select("cluster", F.posexplode("embedding").alias("dim", "x"))
-            .groupBy("cluster", "dim")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                    lambda s: s["m"],
-                ).alias("centroid")
-            )
-        )
-        cent.write.mode("overwrite").parquet(f"{path}/centroids")
+        _write_centroids(emb.select("vec_id", "embedding").join(clusters, "vec_id"), path)
     finally:
         clusters.unpersist()
 
@@ -1092,67 +986,18 @@ def ivfpq_query_index(spark, queries: DataFrame, path: str,
     """Probe a persisted IVF-PQ index: (vec_id, neighbor_id,
     adc_dist, rank) — asymmetric-distance top-k within each query's
     ``nprobe`` cells, computed from the candidates' PQ codes alone.
-    Static partition pruning on the probed cells, exactly like
-    :func:`ivf_query_index`; the difference is the scan payload:
-    4-byte codes instead of D-float vectors. Centroids sorted by
-    cluster id for deterministic tie-breaks, as in
-    :func:`ivf_query_index`."""
-    import numpy as np
-    import pandas as pd
-
-    cents = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r["cluster"],
-    )
-    cids = np.array([r["cluster"] for r in cents], dtype="int32")
-    IC = np.stack([np.array(r["centroid"], dtype="float64") for r in cents])
-    icn2 = (IC * IC).sum(axis=1)
-
-    def rank_cells(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            D = -2.0 * (E @ IC.T) + icn2
-            # clamp: nprobe beyond the trained cell count probes all
-            p = min(nprobe, D.shape[1])
-            order = np.argsort(D, axis=1, kind="stable")[:, :p]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), p),
-                    "cluster": cids[order.reshape(-1)],
-                }
-            )
-
-    # MEMORY_ONLY: same bounded-cache policy as ivf_pq_topk's ranked
-    # table — probe tables from long serving sessions LRU-evict
-    # (eviction = recompute) instead of accumulating on disk
-    from pyspark import StorageLevel
-
-    from sift_spark.caching import local_persist
-
-    # registered builder-local cache (r12) — see ivf_pq_topk's ranked
-    probes = local_persist(
-        queries.select("vec_id", "embedding").mapInPandas(
-            rank_cells, "vec_id long, cluster int"
-        ),
-        eager=False,
-        level=StorageLevel.MEMORY_ONLY,
-    )
-    probed = sorted(r["cluster"] for r in probes.select("cluster").distinct().collect())
-    cells = spark.read.parquet(f"{path}/cells").where(F.col("cluster").isin(probed))
+    Same probe as :func:`ivf_query_index` (:func:`_probe_index`); the
+    difference is the scan payload: 4-byte codes instead of D-float
+    vectors."""
+    q_side, cells = _probe_index(spark, queries, path, nprobe)
     # per-cell cogrouped ADC — never a (query, member) pair row with a
     # replicated query vector (see _cogroup_adc_topk)
-    q_side = probes.join(queries.select("vec_id", "embedding"), "vec_id")
     m_side = cells.select(
         F.col("vec_id").alias("neighbor_id"), "codes", "cluster"
     )
-    scored = _cogroup_adc_topk(q_side, m_side, "cluster", k)
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
+    return _topk_window(
+        _cogroup_adc_topk(q_side, m_side, "cluster", k), k, "adc_dist", largest=False
     )
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def normalize_embeddings(emb: DataFrame) -> DataFrame:
@@ -1341,92 +1186,25 @@ def hard_negatives(emb: DataFrame, k: int = 5, n_blocks: int = 8,
     window finishes. Communication O(N·nprobe·oversample·k), never a
     vector cross join; mining quality is bounded by IVF recall
     (tested ≥ the IVF recall gate on the fixture corpus)."""
-    import pandas as pd  # noqa: F401 (applyInPandas requirement)
-
-    if method == "ivf":
-        lab = emb.select("vec_id", "label")
-        cand = ann_ivf_topk(
-            emb.select("vec_id", "embedding"), k=oversample * k,
-            nprobe=nprobe, n_cells=_auto_n_cells(emb, n_cells),
-        ).select("vec_id", "neighbor_id", "sim")
-        filt = (
-            cand.join(lab, "vec_id")
-            .join(
-                lab.select(
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.col("label").alias("__nlab"),
-                ),
-                "neighbor_id",
-            )
-            .where(F.col("label") != F.col("__nlab"))
+    if method != "ivf":
+        return _tile_topk(emb, k, n_blocks, label="label")
+    lab = emb.select("vec_id", "label")
+    cand = ann_ivf_topk(
+        emb.select("vec_id", "embedding"), k=oversample * k,
+        nprobe=nprobe, n_cells=_auto_n_cells(emb, n_cells),
+    ).select("vec_id", "neighbor_id", "sim")
+    filt = (
+        cand.join(lab, "vec_id")
+        .join(
+            lab.select(
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("label").alias("__nlab"),
+            ),
+            "neighbor_id",
         )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("sim").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            filt.withColumn("rank", F.row_number().over(w).cast("int"))
-            .where(F.col("rank") <= k)
-            .select("vec_id", "neighbor_id", "sim", "rank")
-        )
-
-    spark = emb.sparkSession
-    left = (
-        emb.select(
-            F.col("vec_id").alias("lid"),
-            F.col("embedding").alias("lemb"),
-            F.col("label").alias("llab"),
-        )
-        .withColumn("lb", F.col("lid") % n_blocks)
-        .crossJoin(F.broadcast(spark.range(n_blocks).select(F.col("id").cast("long").alias("rb"))))
+        .where(F.col("label") != F.col("__nlab"))
     )
-    right = (
-        emb.select(
-            F.col("vec_id").alias("rid"),
-            F.col("embedding").alias("remb"),
-            F.col("label").alias("rlab"),
-        )
-        .withColumn("rb", F.col("rid") % n_blocks)
-        .crossJoin(F.broadcast(spark.range(n_blocks).select(F.col("id").cast("long").alias("lb"))))
-    )
-
-    def tile(key, l, r):
-        import numpy as np
-        import pandas as pd
-
-        if len(l) == 0 or len(r) == 0:
-            return pd.DataFrame({"vec_id": [], "neighbor_id": [], "sim": []})
-        L = np.stack(l["lemb"].to_numpy()).astype("float64")
-        R = np.stack(r["remb"].to_numpy()).astype("float64")
-        L = L / np.linalg.norm(L, axis=1, keepdims=True)
-        R = R / np.linalg.norm(R, axis=1, keepdims=True)
-        lids, rids = l["lid"].to_numpy(), r["rid"].to_numpy()
-        llab, rlab = l["llab"].to_numpy(), r["rlab"].to_numpy()
-        # strip-mined GEMM (see _tile_sims) + different-label validity
-        # mask + vectorized exact per-strip top-k (see _topk_rows);
-        # rows split across strips, so per-strip ≡ per-tile emission
-        strip = max(128, _GEMM_STRIP_CELLS // max(1, R.shape[0]))
-        outs = []
-        for lo in range(0, L.shape[0], strip):
-            ii, jj, sims = _topk_rows(
-                L[lo:lo + strip] @ R.T, rids, k,
-                valid=llab[lo:lo + strip, None] != rlab[None, :],
-            )
-            outs.append(pd.DataFrame(
-                {"vec_id": lids[lo:lo + strip][ii],
-                 "neighbor_id": rids[jj], "sim": sims}
-            ))
-        return outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
-
-    pairs = (
-        left.groupby("lb", "rb")
-        .cogroup(right.groupby("lb", "rb"))
-        .applyInPandas(tile, schema="vec_id long, neighbor_id long, sim double")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-    )
+    return _topk_window(filt, k).select("vec_id", "neighbor_id", "sim", "rank")
 
 
 def label_spread(emb: DataFrame, k: int = 5, n_rounds: int = 2,
@@ -1487,22 +1265,14 @@ def label_spread(emb: DataFrame, k: int = 5, n_rounds: int = 2,
     )
 
 
-def ivf_recall_report(spark, emb: DataFrame, path: str, k: int = 5,
-                      nprobe: int = 2) -> DataFrame:
-    """Recall audit for the PERSISTED serving index
-    (:func:`ivf_query_index`) against the exact brute-force ground
-    truth — same one-row report shape as :func:`ann_recall_report`
-    (n_queries, avg_recall, min_recall, full_recall_frac), but the
-    approximate side is the index a deployment actually serves from
-    (trained member-mean centroids, partition-pruned probe), so this
-    is the gate to run AFTER a build/retrain, before flipping serving
-    traffic to the new index. Sample the query slice at 100 TB; the
-    report shape is identical."""
+def _recall_report(emb: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """Score an approximate top-k frame against the exact brute-force
+    top-k at the same k — one row (n_queries, avg_recall, min_recall,
+    full_recall_frac). The comparison is a semi-join of two (n·k)-row
+    frames plus per-vector counts — tiny next to either search."""
     exact = ann_topk_bruteforce(emb, k=k).select("vec_id", "neighbor_id")
-    approx = ivf_query_index(spark, emb, path, k=k, nprobe=nprobe).select(
-        "vec_id", "neighbor_id"
-    )
-    hits = exact.join(approx, ["vec_id", "neighbor_id"], "left_semi")
+    hits = exact.join(approx.select("vec_id", "neighbor_id"), ["vec_id", "neighbor_id"],
+                      "left_semi")
     per = exact.groupBy("vec_id").agg(F.count(F.lit(1)).alias("n_true"))
     hit_per = hits.groupBy("vec_id").agg(F.count(F.lit(1)).alias("n_hit"))
     rec = per.join(hit_per, "vec_id", "left").select(
@@ -1518,6 +1288,20 @@ def ivf_recall_report(spark, emb: DataFrame, path: str, k: int = 5,
             6,
         ).alias("full_recall_frac"),
     )
+
+
+def ivf_recall_report(spark, emb: DataFrame, path: str, k: int = 5,
+                      nprobe: int = 2) -> DataFrame:
+    """Recall audit for the PERSISTED serving index
+    (:func:`ivf_query_index`) against the exact brute-force ground
+    truth — same one-row report shape as :func:`ann_recall_report`
+    (n_queries, avg_recall, min_recall, full_recall_frac), but the
+    approximate side is the index a deployment actually serves from
+    (trained member-mean centroids, partition-pruned probe), so this
+    is the gate to run AFTER a build/retrain, before flipping serving
+    traffic to the new index. Sample the query slice at 100 TB; the
+    report shape is identical."""
+    return _recall_report(emb, ivf_query_index(spark, emb, path, k=k, nprobe=nprobe), k)
 
 
 def ivfpq_recall_report(spark, emb: DataFrame, path: str, k: int = 5,
@@ -1530,26 +1314,7 @@ def ivfpq_recall_report(spark, emb: DataFrame, path: str, k: int = 5,
     (quantization error reorders near-ties). A deployment reads the
     two reports together: ivf_recall_report isolates the nprobe knob,
     this one adds the code-budget (PQ_M × PQ_K) knob."""
-    exact = ann_topk_bruteforce(emb, k=k).select("vec_id", "neighbor_id")
-    approx = ivfpq_query_index(spark, emb, path, k=k, nprobe=nprobe).select(
-        "vec_id", "neighbor_id"
-    )
-    hits = exact.join(approx, ["vec_id", "neighbor_id"], "left_semi")
-    per = exact.groupBy("vec_id").agg(F.count(F.lit(1)).alias("n_true"))
-    hit_per = hits.groupBy("vec_id").agg(F.count(F.lit(1)).alias("n_hit"))
-    rec = per.join(hit_per, "vec_id", "left").select(
-        "vec_id",
-        (F.coalesce(F.col("n_hit"), F.lit(0)) / F.col("n_true")).alias("rec"),
-    )
-    return rec.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.round(F.avg("rec"), 6).alias("avg_recall"),
-        F.round(F.min("rec"), 6).alias("min_recall"),
-        F.round(
-            F.sum(F.when(F.col("rec") == 1.0, 1).otherwise(0)) / F.count(F.lit(1)),
-            6,
-        ).alias("full_recall_frac"),
-    )
+    return _recall_report(emb, ivfpq_query_index(spark, emb, path, k=k, nprobe=nprobe), k)
 
 
 def ann_recall_report(emb: DataFrame, k: int = 5, nprobe: int = 2) -> DataFrame:
@@ -1562,26 +1327,8 @@ def ann_recall_report(emb: DataFrame, k: int = 5, nprobe: int = 2) -> DataFrame:
     exposes the worst-served query vector (a centroid-boundary
     casualty the average hides), full_recall_frac says how many
     queries are served exactly. Both sides are existing operators
-    (`ann_topk_bruteforce`, `ann_ivf_topk`); the comparison is a
-    semi-join of two (n·k)-row frames plus per-vector counts — tiny
-    next to either search. Run it on a sampled slice at 100 TB; the
+    (`ann_topk_bruteforce`, `ann_ivf_topk`) joined by
+    :func:`_recall_report`. Run it on a sampled slice at 100 TB; the
     report shape is identical.
     """
-    exact = ann_topk_bruteforce(emb, k=k).select("vec_id", "neighbor_id")
-    approx = ann_ivf_topk(emb, k=k, nprobe=nprobe).select("vec_id", "neighbor_id")
-    hits = exact.join(approx, ["vec_id", "neighbor_id"], "left_semi")
-    per = exact.groupBy("vec_id").agg(F.count(F.lit(1)).alias("n_true"))
-    hit_per = hits.groupBy("vec_id").agg(F.count(F.lit(1)).alias("n_hit"))
-    rec = per.join(hit_per, "vec_id", "left").select(
-        "vec_id",
-        (F.coalesce(F.col("n_hit"), F.lit(0)) / F.col("n_true")).alias("rec"),
-    )
-    return rec.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.round(F.avg("rec"), 6).alias("avg_recall"),
-        F.round(F.min("rec"), 6).alias("min_recall"),
-        F.round(
-            F.sum(F.when(F.col("rec") == 1.0, 1).otherwise(0)) / F.count(F.lit(1)),
-            6,
-        ).alias("full_recall_frac"),
-    )
+    return _recall_report(emb, ann_ivf_topk(emb, k=k, nprobe=nprobe), k)

@@ -163,6 +163,54 @@ def test_comention_family_plan_shape(spark, monkeypatch, name):
     assert got == COMENTION_PLAN_PINS[name]
 
 
+# Executed-plan node counts of the ANN family's registry queries at
+# SF_SMOKE, as (ShuffleExchange, FlatMapCoGroupsInPandas, MapInPandas,
+# SortMergeJoin, BroadcastHashJoin, Window). Recorded while every
+# operator in operators/similarity.py still carried its own copy of
+# the nearest-cell, GEMM top-k and recall kernels, so the shared
+# kernels must reproduce each physical shape exactly. The walk
+# includes the plans of persisted intermediates.
+ANN_PLAN_PINS = {
+    "ann_topk_bruteforce": (3, 1, 0, 0, 0, 1),
+    "ann_ivf_bucketed": (3, 1, 2, 0, 2, 1),
+    "ann_ivf_scaled": (3, 1, 2, 0, 2, 1),
+    "ann_lsh_bucketed": (4, 1, 2, 0, 2, 1),
+    "ann_lsh_scaled": (4, 1, 2, 0, 2, 1),
+    "ivf_pq_topk": (3, 1, 3, 0, 2, 1),
+    "ivf_query_index": (3, 1, 1, 0, 1, 1),
+    "ivfpq_query_index": (3, 1, 1, 0, 1, 1),
+    "ann_recall_report": (13, 3, 2, 2, 2, 3),
+    "ivf_recall_report": (13, 3, 1, 2, 1, 3),
+    "ivfpq_recall_report": (13, 3, 1, 2, 1, 3),
+    "hard_negatives": (3, 1, 0, 0, 0, 1),
+    "label_spread": (9, 2, 0, 1, 2, 4),
+    "knn_label_propagation": (3, 1, 0, 0, 1, 2),
+    "kmeans_clusters": (0, 0, 1, 0, 0, 0),
+    "semantic_dedup": (3, 0, 2, 1, 2, 0),
+    "dedup_embedding": (2, 1, 0, 0, 0, 0),
+    "doc_embedding_dup_pairs": (16, 1, 0, 0, 2, 0),
+    "cluster_balanced_sample": (1, 0, 1, 0, 0, 1),
+}
+
+
+@pytest.mark.parametrize("name", list(ANN_PLAN_PINS))
+def test_ann_family_plan_shape(spark, name):
+    from sift_spark.caching import release_local_caches
+    from sift_spark.queries import QUERIES
+    from tests.test_plan_audit import plan_nodes
+
+    release_local_caches()  # another builder's cached subplan would change the shape
+    try:
+        plan = QUERIES[name](spark, SF_SMOKE)._jdf.queryExecution().executedPlan()
+        c = Counter(n.getClass().getSimpleName() for n in plan_nodes(plan))
+    finally:
+        release_local_caches()
+    got = tuple(c[k] for k in ("ShuffleExchangeExec", "FlatMapCoGroupsInPandasExec",
+                               "MapInPandasExec", "SortMergeJoinExec",
+                               "BroadcastHashJoinExec", "WindowExec"))
+    assert got == ANN_PLAN_PINS[name]
+
+
 def test_q6_all_predicates_pushed(spark):
     from sift_spark.operators.relational import q6_forecast_revenue
 

@@ -66,25 +66,38 @@ def test_ivfpq_recall_prices_quantization_loss(spark, tmp_path):
 
 def test_nprobe_beyond_cell_count_clamps_to_full_probe(spark, tmp_path):
     """nprobe larger than the (auto-sized or partially-empty) codebook
-    must probe every cell, not raise a pandas length-mismatch in
-    rank_cells (r9 ADVICE #1) — and an all-cells probe of the
-    persisted index must reproduce the exact brute-force top-k."""
+    must probe every cell, not raise a pandas length-mismatch in the
+    nearest-cells kernel (r9 ADVICE #1) — and an all-cells probe must
+    return exactly the rows of a probe of every cell, for the
+    in-session IVF path and for both persisted indexes."""
     from pyspark.sql import functions as F
 
     from sift_spark.operators.similarity import (
+        ann_ivf_topk,
         ivf_pq_topk,
         ivf_query_index,
         ivf_write_index,
+        ivfpq_query_index,
+        ivfpq_write_index,
     )
 
+    def same_rows(a, b):
+        return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").limit(200)
-    # in-session ADC path: fixed 16-cell codebook, nprobe >> 16
+    # in-session paths: fixed 16-cell codebook, nprobe >> 16
+    assert same_rows(ann_ivf_topk(emb, k=3, nprobe=10**6),
+                     ann_ivf_topk(emb, k=3, nprobe=16))
     assert ivf_pq_topk(emb, k=3, nprobe=10**6).count() > 0
 
     idx = str(tmp_path / "ivf_clamp")
     ivf_write_index(emb, idx, n_cells=8)
     full = ivf_query_index(spark, emb, idx, k=3, nprobe=10**6)
-    norm = ivf_query_index(spark, emb, idx, k=3, nprobe=8)
     # probing one-million "cells" == probing all 8: identical results
-    assert full.exceptAll(norm).count() == 0 and norm.exceptAll(full).count() == 0
+    assert same_rows(full, ivf_query_index(spark, emb, idx, k=3, nprobe=8))
     assert full.groupBy("vec_id").count().agg(F.max("count")).collect()[0][0] <= 3
+
+    pq_idx = str(tmp_path / "ivfpq_clamp")
+    ivfpq_write_index(emb, pq_idx, n_cells=8)
+    assert same_rows(ivfpq_query_index(spark, emb, pq_idx, k=3, nprobe=10**6),
+                     ivfpq_query_index(spark, emb, pq_idx, k=3, nprobe=8))

@@ -1,8 +1,8 @@
 """r11 optimization guard: the vectorized per-row top-k kernel helper
 (`similarity._topk_rows`) must be BIT-IDENTICAL to the per-row
 ``np.lexsort`` loop it replaced inside the GEMM/ADC kernels
-(_cogroup_topk, _cogroup_adc_topk, _cogroup_topk_masked,
-ann_topk_bruteforce.emit, hard_negatives.tile).
+(_cogroup_topk, _cogroup_adc_topk and the block-tiled
+_tile_topk emit behind ann_topk_bruteforce and hard_negatives).
 
 The adversarial surface is 6dp rounding boundaries: selection runs on
 RAW values with a 1e-6 margin and re-ranks the survivors on ROUNDED
