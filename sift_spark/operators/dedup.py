@@ -1,21 +1,46 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four families, correctness-checked against DuckDB oracles built from
+Operator groups, correctness-checked against DuckDB oracles built from
 the same constants:
 
-- exact:       md5 content hash → hash-groupBy (one shuffle)
-- minhash-lsh: shingle → k linear-perm minhashes → banded signatures
-               → bucket equi-join candidates → exact-jaccard verify
-- simhash:     tf-weighted 32-bit simhash → byte-band candidates →
-               hamming filter
-- ngram-jaccard: shared-shingle candidate join → exact jaccard
+- exact:        md5 content hash → hash-groupBy or keep-first window
+                (exact_duplicate_groups, dedup_exact), duplicated
+                token blocks and spans (block_dedup, duplicate_spans)
+- minhash-lsh:  shingle → K linear-perm minhashes → banded signatures
+                → bucket equi-join candidates → exact-jaccard verify
+                (minhash_lsh_pairs, the standing index and its
+                incremental probe, fuzzy_contamination,
+                lsh_recall_probe, minhash_band_tuning)
+- shared-shingle set similarity: equi-join on the shingle itself
+                (ngram_jaccard_pairs, containment_pairs, the PPJoin
+                prefix variant, similar_docs, doc_novelty)
+- simhash:      tf-weighted 32-bit simhash → byte-band candidates →
+                hamming filter
+- embedding:    block-tiled cosine GEMM (embedding_dup_pairs,
+                doc_embedding_dup_pairs) and SemDeDup
+- pair graph:   connected components over verified pairs and the
+                reports built on them (clusters, apply, stats, rates)
+
+Each step of the set-similarity join has one implementation that
+every operator composes:
+
+- :func:`shingles` is the one shingle table: (doc_id, shingle, h,
+  n_sh), with the per-doc distinct-shingle count computed map-side;
+- :func:`minhash_band_table` is the one band-table build (signature
+  aggregate → band explode);
+- ``_band_pairs`` is the one (band, sig) collision self-join;
+- ``_shared_shingle_pairs`` is the one shared-shingle self-join that
+  counts the intersection and carries a pair size (jaccard and
+  containment);
+- ``_set_jaccard`` is the one exact jaccard over collected shingle
+  sets (every array verify).
 
 Scale posture: no operator ever builds a full cross join. Candidate
 generation is always an equi-join on a banded/bucketed key, so the
-shuffle is keyed and AQE can split skewed buckets. The shared-shingle
-join (ngram-jaccard) is the heaviest; at very large corpora cap
-shingle document-frequency (drop shingles with df > cap — they only
-ever connect already-connected near-dup clusters) via ``max_df``.
+shuffle is keyed and AQE can split skewed buckets. The plain
+shared-shingle join is the heaviest: it fans out on every common
+shingle. At very large corpora use ``ngram_jaccard_pairs_prefix``,
+whose rarity-ordered prefixes push the hot shingles out of the join.
 """
 
 from __future__ import annotations
@@ -50,16 +75,17 @@ def exact_duplicate_groups(docs: DataFrame) -> DataFrame:
     )
 
 
-def dedup_exact(docs: DataFrame, cols: tuple[str, ...] = ("text",)) -> DataFrame:
-    """Generic exact dedup: keep exactly one row (lowest doc_id) per
-    distinct key — row_number per key group, robust even when doc_ids
-    themselves repeat."""
+def dedup_exact(docs: DataFrame) -> DataFrame:
+    """Exact dedup: keep exactly one row (lowest doc_id) per distinct
+    text — row_number per md5(text) group (the key of
+    :func:`exact_duplicate_groups`), robust even when doc_ids
+    themselves repeat. A NULL text is its own group, distinct from the
+    empty string."""
     from pyspark.sql import Window
 
-    key = F.md5(F.concat_ws("\x1f", *cols))
     w = Window.partitionBy("__key").orderBy("doc_id")
     return (
-        docs.withColumn("__key", key)
+        docs.withColumn("__key", F.md5("text"))
         .withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
         .drop("__key", "__rn")
@@ -123,28 +149,17 @@ def block_dedup(docs: DataFrame, block: int = 20) -> DataFrame:
 
 
 def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct token n-gram shingles with 31-bit hashes:
-    (doc_id, shingle, h). Per-doc dedup is map-side (array_distinct
-    before the explode); tokens materialized once (see word_ngrams
-    perf note)."""
-    from sift_spark.models.text import with_tokens
-
-    return (
-        with_tokens(docs)
-        .select("doc_id", F.explode(F.array_distinct(word_ngrams(F.col("toks"), n, n))).alias("shingle"))
-        .withColumn("h", hash31(F.col("shingle")))
-    )
-
-
-def shingles_with_sizes(docs: DataFrame, n: int = 3) -> DataFrame:
-    """:func:`shingles` plus the per-doc distinct-shingle count:
-    (doc_id, shingle, h, n_sh). ``n_sh`` is the size of the doc's
-    distinct-shingle array computed MAP-SIDE before the explode —
-    zero extra shuffle at any scale — so set-similarity consumers
-    (jaccard/containment) can carry both pair sizes through their
+    """Distinct token n-gram shingles with 31-bit hashes and the per-doc
+    distinct-shingle count: (doc_id, shingle, h, n_sh). Per-doc dedup
+    is map-side (array_distinct before the explode); tokens
+    materialized once (see word_ngrams perf note). ``n_sh`` is the
+    size of the doc's distinct-shingle array, computed MAP-SIDE before
+    the explode — zero extra shuffle at any scale — so the jaccard and
+    containment pair operators carry both pair sizes through their
     shared-shingle self-join instead of re-aggregating per-doc sizes
-    and joining them back per pair side (r12: two joins + one
-    aggregate deleted from each consumer's plan)."""
+    and joining them back (r12: two joins + one aggregate deleted from
+    each consumer's plan). Consumers that do not read ``n_sh`` project
+    it away and Catalyst prunes the size computation."""
     from sift_spark.models.text import with_tokens
 
     arr = F.array_distinct(word_ngrams(F.col("toks"), n, n))
@@ -155,8 +170,8 @@ def shingles_with_sizes(docs: DataFrame, n: int = 3) -> DataFrame:
     # the build. Outer generates infer nothing; the post-explode
     # isnotnull drops exactly the rows plain explode never emits
     # (empty arrays — shingle elements themselves are concat_ws output
-    # and never null), so the output is identical (row-equality
-    # tested) with ONE ngram pass.
+    # and never null), so the output is identical (tested against the
+    # plain-explode form) with ONE ngram pass.
     return (
         with_tokens(docs)
         .select("doc_id", arr.alias("_sh"))
@@ -210,12 +225,65 @@ def _bands_from_signatures(mh: DataFrame) -> DataFrame:
 def minhash_band_table(docs: DataFrame, n: int = 3,
                        sh: DataFrame | None = None) -> DataFrame:
     """Banded signatures: (doc_id, band, sig) — md5 over each band's
-    row values; the (band, sig) pair is the LSH bucket key. ``sh``:
-    optional pre-materialized ``shingles(docs, n)`` (the session's
-    shared artifact) — the signature aggregate then reads the cache
-    instead of re-tokenizing."""
-    return _bands_from_signatures(
-        _minhash_from_shingles(shingles(docs, n) if sh is None else sh)
+    row values; the (band, sig) pair is the LSH bucket key. The one
+    band-table build: every banded operator composes it. ``sh``:
+    optional pre-built ``shingles(docs, n)`` table (the session's
+    shared artifact, or a caller's persisted one) — the signature
+    aggregate then reads it instead of re-tokenizing."""
+    if sh is None:
+        sh = shingles(docs, n)
+    return _bands_from_signatures(_minhash_from_shingles(sh))
+
+
+def _band_pairs(bt: DataFrame) -> DataFrame:
+    """Band-collision candidates within one band table: every (doc1,
+    doc2) with doc1 < doc2 that agrees on some (band, sig) bucket —
+    one row per colliding band (callers deduplicate)."""
+    return (
+        bt.alias("l")
+        .join(bt.alias("r"), (F.col("l.band") == F.col("r.band")) & (F.col("l.sig") == F.col("r.sig")))
+        .where(F.col("l.doc_id") < F.col("r.doc_id"))
+        .select(F.col("l.doc_id").alias("doc1"), F.col("r.doc_id").alias("doc2"))
+    )
+
+
+def _set_jaccard(s1: str, s2: str) -> Column:
+    """Exact jaccard |S1∩S2| / (|S1|+|S2|−|S1∩S2|) of two collected
+    shingle-set columns, rounded to 6dp like every oracle."""
+    inter = F.size(F.array_intersect(s1, s2))
+    return F.round(inter / (F.size(s1) + F.size(s2) - inter), 6)
+
+
+def _shared_shingle_pairs(sh: DataFrame, size: Column,
+                          prune: Column | None = None) -> DataFrame:
+    """The shared-shingle self-join: (doc1, doc2, inter, size) for
+    every pair doc1 < doc2 sharing ≥1 shingle of ``sh`` (doc_id,
+    shingle, n_sh). Intersection sizes come straight off the join —
+    shingles are distinct per doc — so there is no candidate-distinct
+    + re-join pass: one shuffle join + one aggregate.
+
+    ``size`` is ONE int derived from the two sides' map-side ``n_sh``
+    (``l.n_sh``/``r.n_sh``) at join time. It is functionally dependent
+    on the pair key, so min() carries it through the pair aggregate
+    deterministically with a single extra agg buffer — the per-doc
+    size aggregate and its two pair-table joins never enter the plan.
+    ``prune``: optional extra join predicate over the same columns,
+    applied inside the join, before the pair shuffle."""
+    cond = F.col("l.doc_id") < F.col("r.doc_id")
+    if prune is not None:
+        cond = cond & prune
+    sh = sh.select("doc_id", "shingle", "n_sh")
+    return (
+        sh.alias("l")
+        .join(sh.alias("r"), F.col("l.shingle") == F.col("r.shingle"))
+        .where(cond)
+        .select(
+            F.col("l.doc_id").alias("doc1"),
+            F.col("r.doc_id").alias("doc2"),
+            size.alias("size"),
+        )
+        .groupBy("doc1", "doc2")
+        .agg(F.count(F.lit(1)).alias("inter"), F.min("size").alias("size"))
     )
 
 
@@ -256,28 +324,22 @@ def minhash_lsh_pairs(
     do this between timed repetitions so warm runs recompute instead
     of cache-reading). Passing a pre-built ``sh`` (see parameter)
     skips both the persist and the eager job — the caller owns that
-    table's lifecycle. ``bt``: optional pre-materialized band table
-    (``minhash_band_table``/the session's band artifact, r11) — the
-    signature aggregate + band explode then read the caller's cache
-    instead of rebuilding; caller owns its lifecycle."""
+    table's lifecycle; it is a ``shingles(docs, n)`` table. ``bt``:
+    optional pre-materialized band table (``minhash_band_table``/the
+    session's band artifact, r11) — the signature aggregate + band
+    explode then read the caller's cache instead of rebuilding; caller
+    owns its lifecycle."""
     own_sh = sh is None
     if own_sh:
-        sh = local_persist(shingles(docs, n), eager=False)
-    if bt is None:
-        bt = local_persist(
-            _bands_from_signatures(_minhash_from_shingles(sh)), eager=False
+        sh = local_persist(
+            shingles(docs, n).select("doc_id", "shingle", "h"), eager=False
         )
+    if bt is None:
+        bt = local_persist(minhash_band_table(docs, n, sh=sh), eager=False)
         bt.count()  # materializes bt AND (when owned) sh's cache underneath it
     elif own_sh:
         sh.count()  # bt is caller-owned; still materialize our own sh cache
-    cand = (
-        bt.alias("l")
-        .join(bt.alias("r"), (F.col("l.band") == F.col("r.band")) & (F.col("l.sig") == F.col("r.sig")))
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("doc1"), F.col("r.doc_id").alias("doc2"))
-        .distinct()
-    )
-    return _jaccard_verify(cand, sh, threshold)
+    return _jaccard_verify(_band_pairs(bt).distinct(), sh, threshold)
 
 
 # --- connected components ----------------------------------------------
@@ -468,17 +530,10 @@ def _jaccard_verify(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFra
     )
     d1 = doc_sh.select(F.col("doc_id").alias("doc1"), F.col("S").alias("S1"))
     d2 = doc_sh.select(F.col("doc_id").alias("doc2"), F.col("S").alias("S2"))
-    inter = F.size(F.array_intersect("S1", "S2"))
     return (
         cand.join(d1, "doc1")
         .join(d2, "doc2")
-        .select(
-            "doc1",
-            "doc2",
-            F.round(
-                inter / (F.size("S1") + F.size("S2") - inter), 6
-            ).alias("jaccard"),
-        )
+        .select("doc1", "doc2", _set_jaccard("S1", "S2").alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
 
@@ -570,90 +625,33 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
-                        max_df: int | None = None,
                         sh: DataFrame | None = None) -> DataFrame:
     """Exact jaccard over token n-gram shingle sets for pairs sharing
     ≥1 shingle: (doc1, doc2, jaccard ≥ threshold).
 
-    ``max_df`` (scale path): drop shingles appearing in more than
-    max_df docs before pairing — ubiquitous shingles dominate the
-    candidate join while contributing almost nothing to jaccard
-    precision at high thresholds. ``sh``: optional pre-materialized
-    ``shingles(docs, n)`` table (see minhash_lsh_pairs docstring)."""
+    One shared-shingle self-join (``_shared_shingle_pairs``) carrying
+    n1+n2 — jaccard = inter/(n1+n2-inter) needs only the sum. The
+    jaccard size bound J ≤ min(n1,n2)/max(n1,n2) prunes pairs that can
+    never reach the rounded threshold (6dp rounding moves a value
+    ≤5e-7, so the 1e-6 margin is rounding-safe) INSIDE the join,
+    before the pair shuffle. Hot shingles at scale are
+    :func:`ngram_jaccard_pairs_prefix`'s job. ``sh``: optional
+    pre-materialized ``shingles(docs, n)`` table, which carries
+    ``n_sh`` (see minhash_lsh_pairs docstring)."""
     if sh is None:
-        # persist: the shingle table feeds both sides of the self-join;
-        # sizes ride map-side (shingles_with_sizes), so no size branch
-        sh = local_persist(
-            shingles_with_sizes(docs, n).select("doc_id", "shingle", "n_sh")
-        )
-    # fast path (r12): when the table carries the map-side per-doc
-    # size (the session artifact does), both pair sizes ride the
-    # self-join rows — the per-doc size aggregate and its two
-    # pair-table joins are deleted from the plan. The jaccard size
-    # bound J ≤ min(n1,n2)/max(n1,n2) additionally prunes pairs that
-    # can never reach the rounded threshold (6dp rounding moves a
-    # value ≤5e-7, so the 1e-6 margin is rounding-safe) INSIDE the
-    # join, before the pair shuffle. max_df caps re-filter the shingle
-    # universe, which invalidates the precomputed sizes — that path
-    # keeps the aggregate-sizes form.
-    if max_df is None and "n_sh" in sh.columns:
-        join_sh = sh.select("doc_id", "shingle", "n_sh")
-        # carry ONE derived int (n1+n2) through the pair aggregate —
-        # jaccard = inter/(n1+n2-inter) needs only the sum, and the
-        # sum is functionally dependent on the pair key so min()
-        # carries it deterministically with a single extra agg buffer
-        inter = (
-            join_sh.alias("l")
-            .join(join_sh.alias("r"), F.col("l.shingle") == F.col("r.shingle"))
-            .where(
-                (F.col("l.doc_id") < F.col("r.doc_id"))
-                & (
-                    F.least(F.col("l.n_sh"), F.col("r.n_sh"))
-                    >= (F.lit(threshold) - F.lit(1e-6))
-                    * F.greatest(F.col("l.n_sh"), F.col("r.n_sh"))
-                )
-            )
-            .select(
-                F.col("l.doc_id").alias("doc1"),
-                F.col("r.doc_id").alias("doc2"),
-                (F.col("l.n_sh") + F.col("r.n_sh")).alias("s_sh"),
-            )
-            .groupBy("doc1", "doc2")
-            .agg(F.count(F.lit(1)).alias("inter"), F.min("s_sh").alias("s_sh"))
-        )
-        return inter.select(
-            "doc1",
-            "doc2",
-            F.round(F.col("inter") / (F.col("s_sh") - F.col("inter")), 6).alias("jaccard"),
-        ).where(F.col("jaccard") >= threshold)
-    sh = sh.select("doc_id", "shingle")
-    join_sh = sh
-    if max_df is not None:
-        rare = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).where(F.col("df") <= max_df)
-        join_sh = local_persist(sh.join(rare.select("shingle"), "shingle"))
-    # intersection sizes come straight off the shared-shingle join
-    # (shingles are distinct per doc), skipping the candidate-distinct
-    # + re-join passes — one shuffle join + one aggregate
-    inter = (
-        join_sh.alias("l")
-        .join(join_sh.alias("r"), F.col("l.shingle") == F.col("r.shingle"))
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .groupBy(F.col("l.doc_id").alias("doc1"), F.col("r.doc_id").alias("doc2"))
-        .agg(F.count(F.lit(1)).alias("inter"))
+        # persist: the shingle table feeds both sides of the self-join
+        sh = local_persist(shingles(docs, n).select("doc_id", "shingle", "n_sh"))
+    inter = _shared_shingle_pairs(
+        sh,
+        F.col("l.n_sh") + F.col("r.n_sh"),
+        prune=F.least(F.col("l.n_sh"), F.col("r.n_sh"))
+        >= (F.lit(threshold) - F.lit(1e-6)) * F.greatest(F.col("l.n_sh"), F.col("r.n_sh")),
     )
-    # sizes from the SAME (possibly df-capped) shingle set as the
-    # intersections — mixed universes would under-report jaccard
-    sizes = join_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("doc1"), F.col("n_sh").alias("n1")), "doc1")
-        .join(sizes.select(F.col("doc_id").alias("doc2"), F.col("n_sh").alias("n2")), "doc2")
-        .select(
-            "doc1",
-            "doc2",
-            F.round(F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter")), 6).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return inter.select(
+        "doc1",
+        "doc2",
+        F.round(F.col("inter") / (F.col("size") - F.col("inter")), 6).alias("jaccard"),
+    ).where(F.col("jaccard") >= threshold)
 
 
 def embedding_dup_pairs(emb: DataFrame, threshold: float = 0.4, n_blocks: int = 8) -> DataFrame:
@@ -694,60 +692,21 @@ def containment_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
     longer one) that symmetric jaccard dilutes away — the other half
     of a near-dup screen for training corpora.
 
-    Same single shared-shingle self-join shape as
-    ``ngram_jaccard_pairs`` (intersections off the join, sizes from
-    the same persisted shingle table); ``max_df`` capping applies
-    identically at scale. When ``sh`` carries the map-side ``n_sh``
-    column (:func:`shingles_with_sizes` — the session artifact does),
-    both pair sizes ride the self-join rows and the size aggregate +
-    two pair-table joins are deleted (r12). NOTE: no size-bound prune
-    exists for containment — a tiny doc fully inside a huge one is
-    exactly what this operator must catch."""
+    Same single shared-shingle self-join as ``ngram_jaccard_pairs``
+    (``_shared_shingle_pairs``), carrying min(n1,n2) off the map-side
+    ``n_sh`` column. ``sh``: optional pre-materialized
+    ``shingles(docs, n)`` table (the session artifact). NOTE: no
+    size-bound prune exists for containment — a tiny doc fully inside
+    a huge one is exactly what this operator must catch."""
     if sh is None:
         # materialize: the self-join's input stages race a lazy cache
-        sh = local_persist(
-            shingles_with_sizes(docs, n).select("doc_id", "shingle", "n_sh")
-        )
-    if "n_sh" in sh.columns:
-        sh = sh.select("doc_id", "shingle", "n_sh")
-        # containment needs only min(n1,n2): compute it at join time
-        # and carry ONE int through the pair aggregate
-        inter = (
-            sh.alias("l")
-            .join(sh.alias("r"), F.col("l.shingle") == F.col("r.shingle"))
-            .where(F.col("l.doc_id") < F.col("r.doc_id"))
-            .select(
-                F.col("l.doc_id").alias("doc1"),
-                F.col("r.doc_id").alias("doc2"),
-                F.least(F.col("l.n_sh"), F.col("r.n_sh")).alias("m_sh"),
-            )
-            .groupBy("doc1", "doc2")
-            .agg(F.count(F.lit(1)).alias("inter"), F.min("m_sh").alias("m_sh"))
-        )
-        return inter.select(
-            "doc1",
-            "doc2",
-            F.round(F.col("inter") / F.col("m_sh"), 6).alias("containment"),
-        ).where(F.col("containment") >= threshold)
-    sh = sh.select("doc_id", "shingle")
-    inter = (
-        sh.alias("l")
-        .join(sh.alias("r"), F.col("l.shingle") == F.col("r.shingle"))
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .groupBy(F.col("l.doc_id").alias("doc1"), F.col("r.doc_id").alias("doc2"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("doc1"), F.col("n_sh").alias("n1")), "doc1")
-        .join(sizes.select(F.col("doc_id").alias("doc2"), F.col("n_sh").alias("n2")), "doc2")
-        .select(
-            "doc1",
-            "doc2",
-            F.round(F.col("inter") / F.least(F.col("n1"), F.col("n2")), 6).alias("containment"),
-        )
-        .where(F.col("containment") >= threshold)
-    )
+        sh = local_persist(shingles(docs, n).select("doc_id", "shingle", "n_sh"))
+    inter = _shared_shingle_pairs(sh, F.least(F.col("l.n_sh"), F.col("r.n_sh")))
+    return inter.select(
+        "doc1",
+        "doc2",
+        F.round(F.col("inter") / F.col("size"), 6).alias("containment"),
+    ).where(F.col("containment") >= threshold)
 
 
 def doc_novelty(docs: DataFrame, n: int = 3,
@@ -933,10 +892,7 @@ def lsh_index(docs: DataFrame, n: int = 3,
     cache instead of re-tokenizing."""
     if sh is None:
         sh = shingles(docs, n)
-    return (
-        _bands_from_signatures(_minhash_from_shingles(sh)),
-        sh.select("doc_id", "shingle"),
-    )
+    return minhash_band_table(docs, n, sh=sh), sh.select("doc_id", "shingle")
 
 
 def write_lsh_index(docs: DataFrame, bands_table: str = "lsh_index_bands",
@@ -1009,14 +965,14 @@ def minhash_lsh_pairs_incremental(new_docs: DataFrame, index_bands: DataFrame,
     full-corpus table and banding the sliced docs are identical) —
     the batch signature aggregate is then skipped entirely."""
     new_sh_base = (
-        shingles(new_docs, n).localCheckpoint(eager=False)
+        shingles(new_docs, n).select("doc_id", "shingle", "h").localCheckpoint(eager=False)
         if new_sh is None
         else new_sh
     )
     if new_bands is None:
-        new_bands = _bands_from_signatures(
-            _minhash_from_shingles(new_sh_base)
-        ).localCheckpoint(eager=False)
+        new_bands = minhash_band_table(new_docs, n, sh=new_sh_base).localCheckpoint(
+            eager=False
+        )
     new_sh = new_sh_base.select("doc_id", "shingle")
 
     cross = (
@@ -1031,16 +987,7 @@ def minhash_lsh_pairs_incremental(new_docs: DataFrame, index_bands: DataFrame,
             F.greatest("l.doc_id", "r.doc_id").alias("doc2"),
         )
     )
-    within = (
-        new_bands.alias("l")
-        .join(
-            new_bands.alias("r"),
-            (F.col("l.band") == F.col("r.band")) & (F.col("l.sig") == F.col("r.sig")),
-        )
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("doc1"), F.col("r.doc_id").alias("doc2"))
-    )
-    cand = cross.union(within).distinct()
+    cand = cross.union(_band_pairs(new_bands)).distinct()
     all_sh = index_shingles.union(new_sh)
     return _jaccard_verify(cand, all_sh, threshold)
 
@@ -1215,21 +1162,12 @@ def ngram_jaccard_pairs_prefix(docs: DataFrame, n: int = 3,
         .distinct()
     )
     arrs = sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("sh_set"))
-    out = (
+    return (
         cands.join(arrs.select(F.col("doc_id").alias("doc1"), F.col("sh_set").alias("s1")), "doc1")
         .join(arrs.select(F.col("doc_id").alias("doc2"), F.col("sh_set").alias("s2")), "doc2")
-        .select(
-            "doc1",
-            "doc2",
-            F.round(
-                F.size(F.array_intersect("s1", "s2"))
-                / (F.size("s1") + F.size("s2") - F.size(F.array_intersect("s1", "s2"))),
-                6,
-            ).alias("jaccard"),
-        )
+        .select("doc1", "doc2", _set_jaccard("s1", "s2").alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
-    return out
 
 
 def fuzzy_contamination(docs: DataFrame, benchmark: DataFrame, n: int = 3,
@@ -1247,11 +1185,10 @@ def fuzzy_contamination(docs: DataFrame, benchmark: DataFrame, n: int = 3,
 
     - the benchmark's band table and shingle set are BROADCAST (eval
       sets are tiny), so the corpus never shuffles for candidates;
-    - the corpus-sized shingle table is NEVER persisted — the per-doc
-      shingle count is fused into the signature aggregate (one extra
-      count beside the K mins), so the only cached table is doc-sized.
-      Caching the raw shingles was measured at 6.5s of a 9.4s pass at
-      sf1 — pure cache-build cost on a table used essentially once;
+    - the corpus-sized shingle table is NEVER persisted — only the
+      doc-sized signature aggregate is cached. Caching the raw
+      shingles was measured at 6.5s of a 9.4s pass at sf1 — pure
+      cache-build cost on a table used essentially once;
     - the exact-jaccard verify re-tokenizes ONLY candidate documents:
       the candidate doc_id set is broadcast-semi-joined onto the
       corpus before shingling, so the second scan prunes to the
@@ -1261,16 +1198,13 @@ def fuzzy_contamination(docs: DataFrame, benchmark: DataFrame, n: int = 3,
     all-pairs. ``docs`` and ``benchmark`` doc_ids must be disjoint
     (they are different tables in practice; the registered query
     splits one table on doc_id % 20)."""
-    # parsed SQL strings, identical expressions (see _minhash_from_shingles)
-    sig_aggs = [
-        F.expr(f"min(({MINHASH_A[i]} * h + {MINHASH_B[i]}) % {MOD31}) AS mh_{i}")
-        for i in range(MINHASH_K)
-    ] + [F.count(F.lit(1)).alias("n_sh")]
     corpus_sh = shingles(docs, n) if sh is None else sh
-    sig = local_persist(corpus_sh.groupBy("doc_id").agg(*sig_aggs), eager=False)
-    bsh = local_persist(shingles(benchmark, n), eager=False)
+    sig = local_persist(_minhash_from_shingles(corpus_sh), eager=False)
+    bsh = local_persist(
+        shingles(benchmark, n).select("doc_id", "shingle", "h"), eager=False
+    )
     bt = _bands_from_signatures(sig)
-    bbt = _bands_from_signatures(_minhash_from_shingles(bsh))
+    bbt = minhash_band_table(benchmark, n, sh=bsh)
     cand = (
         bt.alias("l")
         .join(
@@ -1296,15 +1230,10 @@ def fuzzy_contamination(docs: DataFrame, benchmark: DataFrame, n: int = 3,
     # double intersection join + size joins
     c_sets = csh.groupBy("doc_id").agg(F.collect_set("shingle").alias("S1"))
     b_sets = bsh.groupBy("doc_id").agg(F.collect_set("shingle").alias("S2"))
-    inter = F.size(F.array_intersect("S1", "S2"))
     jac = (
         cand.join(c_sets.select(F.col("doc_id").alias("doc1"), "S1"), "doc1")
         .join(F.broadcast(b_sets.select(F.col("doc_id").alias("doc2"), "S2")), "doc2")
-        .select(
-            "doc1",
-            "doc2",
-            F.round(inter / (F.size("S1") + F.size("S2") - inter), 6).alias("jaccard"),
-        )
+        .select("doc1", "doc2", _set_jaccard("S1", "S2").alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
     return jac.groupBy(F.col("doc1").alias("doc_id")).agg(
@@ -1432,11 +1361,13 @@ def lsh_recall_probe(docs: DataFrame, n: int = 3, threshold: float = 0.8,
     family as the sampling operators, layout-invariant), shrinking the
     exact side ~s² while recall over the slice's pairs estimates
     corpus recall (band collisions are i.i.d. per pair). Default 1 =
-    full audit, pinned by the registered oracle query. When sampling,
-    a caller-provided ``sh`` is DISCARDED and shingles recompute from
-    the sliced docs — the artifact covers the full corpus, so reusing
-    it would silently un-sample the audit; pre-slice your own artifact
-    on the same hash bucket if you need to amortize it (r10 advice).
+    full audit, pinned by the registered oracle query. ``sh``:
+    optional ``shingles(docs, n)`` table; the exact side reads its
+    ``n_sh``. When sampling, a caller-provided ``sh`` is DISCARDED and
+    shingles recompute from the sliced docs — the artifact covers the
+    full corpus, so reusing it would silently un-sample the audit;
+    pre-slice your own artifact on the same hash bucket if you need to
+    amortize it (r10 advice).
     ``bt``: optional pre-materialized band table over the SAME docs
     (the session's band artifact, r11) — the signature aggregate +
     band explode then read the caller's cache; discarded alongside
@@ -1450,9 +1381,8 @@ def lsh_recall_probe(docs: DataFrame, n: int = 3, threshold: float = 0.8,
         bt = None  # likewise the band artifact
     if sh is None:
         # materialize: exact join + signature agg race a lazy cache
-        # (n_sh rides along so the exact side takes the carried-sizes
-        # fast path, r12)
-        sh = local_persist(shingles_with_sizes(docs, n))
+        # (n_sh rides along for the exact side's carried-size join)
+        sh = local_persist(shingles(docs, n))
     # r11: the LSH side needs NO verify pass of its own — a verified
     # LSH pair is by definition a band-colliding pair whose exact
     # jaccard ≥ t, and the exact side already computes jaccard for
@@ -1469,15 +1399,8 @@ def lsh_recall_probe(docs: DataFrame, n: int = 3, threshold: float = 0.8,
     )
     if bt is None:
         # materialize: the self-join's two input stages race
-        bt = local_persist(_bands_from_signatures(_minhash_from_shingles(sh)))
-    cand = (
-        bt.alias("l")
-        .join(bt.alias("r"), (F.col("l.band") == F.col("r.band")) & (F.col("l.sig") == F.col("r.sig")))
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("doc1"), F.col("r.doc_id").alias("doc2"))
-        .distinct()
-    )
-    cand = local_persist(cand)  # materialize: semi + anti consumers race
+        bt = local_persist(minhash_band_table(docs, n, sh=sh))
+    cand = local_persist(_band_pairs(bt).distinct())  # materialize: semi + anti consumers race
     lsh = exact.join(cand, ["doc1", "doc2"], "left_semi")
     missed = exact.join(cand, ["doc1", "doc2"], "left_anti")
     ne = exact.agg(F.count(F.lit(1)).alias("n_exact"))

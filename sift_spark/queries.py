@@ -82,16 +82,15 @@ def _docs_tokenized(spark, sf_dir):
 # query is exactly what a real deployment never does.
 @session_artifact(query="corpus_shingles")
 def _docs_shingles(spark, sf_dir, n=3):
-    from sift_spark.operators.dedup import shingles_with_sizes
+    from sift_spark.operators.dedup import shingles
 
-    # built over the token artifact — the split pass is shared.
-    # r12: the artifact carries the map-side per-doc size column
-    # n_sh (zero extra shuffle — it is the pre-explode array size),
-    # so jaccard/containment consumers carry pair sizes through
-    # their self-joins instead of re-aggregating and joining them
-    # back. The registered corpus_shingles query projects it away
-    # to keep the oracle-checked (doc_id, shingle, h) schema.
-    return shingles_with_sizes(_docs_tokenized(spark, sf_dir), n)
+    # built over the token artifact — the split pass is shared. The
+    # shingle table carries the map-side per-doc size column n_sh
+    # (zero extra shuffle — it is the pre-explode array size), which
+    # jaccard/containment carry through their self-joins. The
+    # registered corpus_shingles query projects it away to keep the
+    # oracle-checked (doc_id, shingle, h) schema.
+    return shingles(_docs_tokenized(spark, sf_dir), n)
 
 
 # The (doc_id, term, tf) posting table: doc_srp_embeddings /

@@ -67,6 +67,7 @@ def process_corpus_batch(batch_df: DataFrame, batch_id: int, index_path: str,
     ``foreachBatch`` body of :func:`stream_corpus_dedup`, exposed so
     replay behavior is directly testable)."""
     from sift_spark.operators.dedup import (
+        minhash_band_table,
         minhash_lsh_pairs_incremental,
         shingles,
     )
@@ -85,19 +86,16 @@ def process_corpus_batch(batch_df: DataFrame, batch_id: int, index_path: str,
     # batch — share a single localCheckpoint'ed table (batch-sized,
     # ContextCleaner-reclaimed, same contract as the incremental
     # operator's internal checkpoint, which new_sh= skips).
-    sh_batch = shingles(batch_df, n).localCheckpoint(eager=False)
+    sh_batch = (
+        shingles(batch_df, n).select("doc_id", "shingle", "h").localCheckpoint(eager=False)
+    )
     pairs = minhash_lsh_pairs_incremental(
         batch_df, bands, sh, n=n, threshold=threshold, new_sh=sh_batch
     )
     pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch_id={batch_id}")
-    from sift_spark.operators.dedup import (
-        _bands_from_signatures,
-        _minhash_from_shingles,
+    minhash_band_table(batch_df, n, sh=sh_batch).write.mode("overwrite").parquet(
+        f"{index_path}/bands/batch_id={batch_id}"
     )
-
-    _bands_from_signatures(_minhash_from_shingles(sh_batch)).write.mode(
-        "overwrite"
-    ).parquet(f"{index_path}/bands/batch_id={batch_id}")
     sh_batch.select("doc_id", "shingle").write.mode(
         "overwrite"
     ).parquet(f"{index_path}/shingles/batch_id={batch_id}")

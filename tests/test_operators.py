@@ -30,8 +30,44 @@ def test_dedup_exact_api(spark):
 
     docs = _docs(spark)
     d1 = docs.unionByName(docs)  # duplicate every row
-    out = dedup_exact(d1, cols=("text",))
+    out = dedup_exact(d1)
     assert out.count() == docs.select("text").distinct().count()
+
+
+def test_dedup_exact_keeps_null_and_empty_text_apart(spark):
+    """A NULL text and an empty text are different contents: both rows
+    survive, and only true text duplicates collapse (keep-first)."""
+    from sift_spark.operators.dedup import dedup_exact
+
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "x"), (4, "x"), (5, None)], "doc_id long, text string"
+    )
+    assert sorted(r.doc_id for r in dedup_exact(df).collect()) == [1, 2, 3]
+
+
+def test_shingles_sizes_match_plain_explode(spark):
+    """The one shingle table: its (doc_id, shingle, h) rows equal the
+    plain-explode construction, and the map-side n_sh equals each
+    doc's shingle row count."""
+    from pyspark.sql import functions as F
+
+    from sift_spark.functions.core import hash31
+    from sift_spark.models.text import with_tokens, word_ngrams
+    from sift_spark.operators.dedup import shingles
+
+    docs = _docs(spark)
+    sh = shingles(docs, 3)
+    assert sh.columns == ["doc_id", "shingle", "h", "n_sh"]
+    plain = (
+        with_tokens(docs)
+        .select("doc_id", F.explode(F.array_distinct(word_ngrams(F.col("toks"), 3, 3))).alias("shingle"))
+        .withColumn("h", hash31(F.col("shingle")))
+    )
+    three = sh.select("doc_id", "shingle", "h")
+    assert three.exceptAll(plain).count() == 0 and plain.exceptAll(three).count() == 0
+    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"), F.min("n_sh").alias("lo"),
+                                      F.max("n_sh").alias("hi"))
+    assert counts.where((F.col("c") != F.col("lo")) | (F.col("c") != F.col("hi"))).count() == 0
 
 
 def test_ann_lsh_recall(spark):

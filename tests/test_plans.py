@@ -117,6 +117,24 @@ def test_pagerank_joins_are_keyed(spark):
     assert plan.count("BroadcastNestedLoopJoin") == 1
 
 
+def _node_counts(build, classes) -> tuple[int, ...]:
+    """Counts of each named physical node class in the executed plan of
+    the frame ``build()`` returns, walking into the plans of persisted
+    intermediates. Builder-local caches are released before the build
+    (another builder's cached subplan would change the shape) and
+    after the count."""
+    from sift_spark.caching import release_local_caches
+    from tests.test_plan_audit import plan_nodes
+
+    release_local_caches()
+    try:
+        plan = build()._jdf.queryExecution().executedPlan()
+        c = Counter(n.getClass().getSimpleName() for n in plan_nodes(plan))
+    finally:
+        release_local_caches()
+    return tuple(c[k] for k in classes)
+
+
 # Executed-plan node counts of the comention family at SF_SMOKE, as
 # (ShuffleExchange, SortMergeJoin, BroadcastHashJoin, HashAggregate).
 # Recorded while every builder still wrote its own comention self-join,
@@ -140,26 +158,22 @@ COMENTION_PLAN_PINS = {
 def test_comention_family_plan_shape(spark, monkeypatch, name):
     from pyspark.sql import functions as F
 
-    from sift_spark.caching import release_local_caches
     from sift_spark.corpora.synthetic import wikify_links
     from sift_spark.models import links as L
     from sift_spark.operators import dedup
-    from tests.test_plan_audit import plan_nodes
 
     # entity_components hands its pair table to the driver-gated star
     # contraction, whose checkpointed output hides the build: pin the
     # pair table the contraction would receive
     monkeypatch.setattr(dedup, "duplicate_clusters_star", lambda pairs: pairs.select(
         F.col("doc1").alias("doc_id"), F.col("doc2").alias("rep_id")))
-    release_local_caches()  # another builder's cached subplan would change the shape
-    try:
-        links = wikify_links(spark.read.parquet(f"{SF_SMOKE}/documents.parquet"))
-        plan = getattr(L, name)(links)._jdf.queryExecution().executedPlan()
-        c = Counter(n.getClass().getSimpleName() for n in plan_nodes(plan))
-    finally:
-        release_local_caches()
-    got = tuple(c[k] for k in ("ShuffleExchangeExec", "SortMergeJoinExec",
-                               "BroadcastHashJoinExec", "HashAggregateExec"))
+    got = _node_counts(
+        lambda: getattr(L, name)(
+            wikify_links(spark.read.parquet(f"{SF_SMOKE}/documents.parquet"))
+        ),
+        ("ShuffleExchangeExec", "SortMergeJoinExec", "BroadcastHashJoinExec",
+         "HashAggregateExec"),
+    )
     assert got == COMENTION_PLAN_PINS[name]
 
 
@@ -195,20 +209,85 @@ ANN_PLAN_PINS = {
 
 @pytest.mark.parametrize("name", list(ANN_PLAN_PINS))
 def test_ann_family_plan_shape(spark, name):
-    from sift_spark.caching import release_local_caches
     from sift_spark.queries import QUERIES
-    from tests.test_plan_audit import plan_nodes
 
-    release_local_caches()  # another builder's cached subplan would change the shape
-    try:
-        plan = QUERIES[name](spark, SF_SMOKE)._jdf.queryExecution().executedPlan()
-        c = Counter(n.getClass().getSimpleName() for n in plan_nodes(plan))
-    finally:
-        release_local_caches()
-    got = tuple(c[k] for k in ("ShuffleExchangeExec", "FlatMapCoGroupsInPandasExec",
-                               "MapInPandasExec", "SortMergeJoinExec",
-                               "BroadcastHashJoinExec", "WindowExec"))
+    got = _node_counts(
+        lambda: QUERIES[name](spark, SF_SMOKE),
+        ("ShuffleExchangeExec", "FlatMapCoGroupsInPandasExec", "MapInPandasExec",
+         "SortMergeJoinExec", "BroadcastHashJoinExec", "WindowExec"),
+    )
     assert got == ANN_PLAN_PINS[name]
+
+
+# Executed-plan node counts of the dedup family at SF_SMOKE, as
+# (ShuffleExchange, SortMergeJoin, BroadcastHashJoin, HashAggregate,
+# ObjectHashAggregate, Window). Recorded while operators/dedup.py still
+# carried its own copies of the shingle build, the band-table build,
+# the band-collision join, the shared-shingle pair self-join and the
+# set-jaccard expression, so the shared kernels must reproduce each
+# physical shape exactly. Plain names are registry queries, which read
+# the session's shared artifacts; names ending in "()" are direct calls
+# on the documents with no ``sh=``, the path that builds its own
+# shingle table. The walk includes the plans of persisted intermediates.
+DEDUP_PLAN_PINS = {
+    "containment_pairs": (3, 0, 1, 2, 0, 0),
+    "dedup_ngram_jaccard": (3, 0, 1, 2, 0, 0),
+    "dedup_jaccard_prefix": (10, 0, 3, 2, 4, 6),
+    "dedup_incremental": (19, 0, 24, 26, 4, 0),
+    "lsh_recall_probe": (14, 0, 7, 16, 0, 0),
+    "fuzzy_contamination": (13, 0, 5, 16, 4, 0),
+    "contamination_check": (3, 0, 1, 4, 0, 0),
+    "contamination_summary": (18, 1, 6, 24, 4, 0),
+    "similar_docs": (7, 0, 2, 6, 0, 1),
+    "doc_novelty": (4, 0, 1, 4, 0, 0),
+    "corpus_shingles": (1, 0, 0, 0, 0, 0),
+    "dedup_exact": (1, 0, 0, 2, 0, 0),
+    "minhash_lsh_pairs()": (14, 0, 9, 34, 4, 0),
+    "ngram_jaccard_pairs()": (1, 0, 1, 2, 0, 0),
+    "containment_pairs()": (1, 0, 1, 2, 0, 0),
+    "ngram_jaccard_pairs_prefix()": (6, 0, 3, 2, 4, 6),
+    "lsh_recall_probe()": (10, 0, 7, 24, 0, 0),
+    "doc_novelty()": (2, 0, 1, 4, 0, 0),
+    "similar_docs()": (3, 0, 2, 6, 0, 1),
+    "fuzzy_contamination()": (10, 0, 5, 16, 4, 0),
+    "contamination_check()": (2, 0, 1, 4, 0, 0),
+    "minhash_lsh_pairs_incremental()": (24, 0, 24, 44, 4, 0),
+}
+
+
+def _dedup_frame(spark, name):
+    """The frame a DEDUP_PLAN_PINS entry pins (see the table above)."""
+    from pyspark.sql import functions as F
+
+    from sift_spark.operators import dedup as D
+    from sift_spark.operators.text_analysis import contamination_check
+    from sift_spark.queries import QUERIES
+
+    if not name.endswith("()"):
+        return QUERIES[name](spark, SF_SMOKE)
+    op = name[:-2]
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    if op in ("fuzzy_contamination", "contamination_check"):
+        fn = D.fuzzy_contamination if op == "fuzzy_contamination" else contamination_check
+        return fn(docs.where(F.col("doc_id") % 20 != 0), docs.where(F.col("doc_id") % 20 == 0))
+    if op == "minhash_lsh_pairs_incremental":
+        old = docs.where(F.col("doc_id") % 5 != 0)
+        return D.minhash_lsh_pairs_incremental(
+            docs.where(F.col("doc_id") % 5 == 0), *D.lsh_index(old)
+        )
+    if op == "similar_docs":
+        return D.similar_docs(docs, query_doc_id=7)
+    return getattr(D, op)(docs)
+
+
+DEDUP_PLAN_CLASSES = ("ShuffleExchangeExec", "SortMergeJoinExec", "BroadcastHashJoinExec",
+                      "HashAggregateExec", "ObjectHashAggregateExec", "WindowExec")
+
+
+@pytest.mark.parametrize("name", list(DEDUP_PLAN_PINS))
+def test_dedup_family_plan_shape(spark, name):
+    got = _node_counts(lambda: _dedup_frame(spark, name), DEDUP_PLAN_CLASSES)
+    assert got == DEDUP_PLAN_PINS[name]
 
 
 def test_q6_all_predicates_pushed(spark):
