@@ -226,7 +226,8 @@ def check_tf_provenance(docs, tf, caller: str) -> None:
     a filtered subset of the tagged corpus keeps its tag (metadata
     survives filters by design) and passes, as does any untagged
     user frame; both remain the caller's responsibility, as
-    documented on each ``tf`` parameter."""
+    documented on models.text.doc_term_tf. Called only through
+    :func:`guards_tf`."""
     d_docs = artifact_dataset(docs, "toks")
     d_tf = artifact_dataset(tf, "tf")
     if d_docs is not None and d_tf is not None and d_docs != d_tf:

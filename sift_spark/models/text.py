@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from sift_spark.functions.core import tokens
+from sift_spark.functions.core import guards_tf, tokens
 
 
 def _ngrams_n(toks: Column, n: int) -> Column:
@@ -77,6 +77,34 @@ def with_tokens(docs: DataFrame, lowercase: bool = False) -> DataFrame:
     return docs.select("doc_id", tokens(text).alias("toks"))
 
 
+def doc_term_tf(docs: DataFrame) -> DataFrame:
+    """The (doc_id, term, tf) unigram posting table of ``docs``: one
+    row per (document, default-case token), tf = the token's count in
+    that document. Reads the session token artifact when ``docs``
+    carries it (see :func:`with_tokens`).
+
+    Every ``tf`` parameter of the text family takes this table —
+    usually the session's shared, provenance-tagged artifact
+    (queries._docs_tf) — and an operator given ``tf=None`` builds it
+    here. CONTRACT: a passed ``tf`` must be the posting table of
+    EXACTLY the ``docs`` passed with it. df is then a per-term row
+    count (tf has one row per (doc, term): the same integers a
+    distinct-doc corpus scan counts) and Σ tf per term is the corpus
+    token count, so the operator runs no corpus pass of its own. The
+    minted dataset tags catch a CROSS-CORPUS mixup (corpus A's docs
+    with corpus B's tf raises, functions.core.guards_tf); a filtered
+    subset of the same corpus keeps its tag and passes, so filtering
+    docs and reusing the full-corpus table stays the caller's
+    responsibility (rebuild tf from the filtered frame, or pass
+    tf=None)."""
+    return (
+        with_tokens(docs)
+        .select("doc_id", F.explode("toks").alias("term"))
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+
+
 def term_frequencies(docs: DataFrame, max_ngram: int = 1, lowercase: bool = False, min_count: int = 1) -> DataFrame:
     """Corpus term frequencies (reference text.py:15
     ``TermFrequencies``): ngram counts with count > min_count."""
@@ -89,6 +117,7 @@ def term_frequencies(docs: DataFrame, max_ngram: int = 1, lowercase: bool = Fals
     )
 
 
+@guards_tf
 def term_doc_frequencies(docs: DataFrame, max_ngram: int = 1, lowercase: bool = False, min_df: int = 2,
                          tf: DataFrame | None = None) -> DataFrame:
     """Document frequencies (reference text.py:110
@@ -96,28 +125,11 @@ def term_doc_frequencies(docs: DataFrame, max_ngram: int = 1, lowercase: bool = 
     df > min_df. Distinct-per-doc before the global count keeps the
     aggregation two map-side-combinable hash aggs.
 
-    ``tf``: optional pre-materialized (doc_id, term, tf) unigram
-    posting table (the session's shared artifact, queries._docs_tf).
-    df is then a per-term ROW COUNT of it — tf has one row per
-    (doc, term), so the integers are exactly the distinct-doc counts
-    the corpus scan computes — and the operator runs zero corpus
-    passes of its own. Only valid for the default tokenization
-    (unigrams, no lowercasing): asking for ngrams the artifact does
-    not hold raises rather than silently recomputing.
-
-    CONTRACT: tf must be the posting table of EXACTLY ``docs`` — a
-    filtered/foreign docs frame with a full-corpus tf silently yields
-    wrong df (and wrong idf N downstream). The minted dataset tags
-    catch the CROSS-CORPUS mixup (corpus A's docs with corpus B's tf
-    raises, functions.core.check_tf_provenance); a SUBSET of the same
-    corpus carries the same tag and passes — filtering docs and
-    reusing the full-corpus artifact is undetectable metadata-wise
-    and remains the caller's responsibility (rebuild tf from the
-    filtered frame, or pass tf=None)."""
+    ``tf``: optional posting table (see :func:`doc_term_tf`); df is
+    then its per-term row count. Only valid for the default
+    tokenization (unigrams, no lowercasing): asking for ngrams the
+    table does not hold raises rather than silently recomputing."""
     if tf is not None:
-        from sift_spark.functions.core import check_tf_provenance
-
-        check_tf_provenance(docs, tf, "term_doc_frequencies")
         if max_ngram != 1 or lowercase:
             raise ValueError(
                 "the (doc_id, term, tf) artifact holds default-case "
@@ -145,8 +157,7 @@ def term_vocab(docs: DataFrame, max_rank: int | None = 10000, min_rank: int | No
                tf: DataFrame | None = None) -> DataFrame:
     """Df-ranked term index (reference text.py:128 ``TermVocab``);
     ties broken by term ascending for cross-engine determinism.
-    ``tf``: optional shared posting-table artifact (see
-    term_doc_frequencies)."""
+    ``tf``: optional posting table (see :func:`doc_term_tf`)."""
     dfs = term_doc_frequencies(docs, max_ngram=max_ngram, lowercase=lowercase, min_df=min_df, tf=tf)
     order = (F.col("df").desc(), F.col("term").asc())
     if max_rank is not None:
@@ -192,9 +203,9 @@ def term_idfs(docs: DataFrame, max_ngram: int = 1, lowercase: bool = False, min_
 
     N comes from a 1-row aggregate cross-joined in (broadcast by
     Catalyst) — no driver-side ``count()`` round trip. ``tf``:
-    optional shared posting-table artifact (see
-    term_doc_frequencies); N still counts ``docs`` (token-less docs
-    belong in N but have no tf rows).
+    optional posting table (see :func:`doc_term_tf`); N still counts
+    ``docs`` (token-less docs belong in N but have no tf rows). This
+    is the one place idf is computed from a posting table.
     """
     dfs = term_doc_frequencies(docs, max_ngram=max_ngram, lowercase=lowercase, min_df=min_df, tf=tf)
     n = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))

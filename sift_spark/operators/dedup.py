@@ -1278,14 +1278,14 @@ def doc_embedding_dup_pairs(docs: DataFrame, threshold: float = 0.9,
     by dim), then block-tiled GEMM with the threshold inside the
     kernel — only qualifying pairs leave a tile.
 
-    ``tf``: optional shared (doc_id, term, tf) posting artifact,
-    passed through to the SRP stage (see doc_srp_embeddings)."""
+    ``tf``: optional posting table (see models.text.doc_term_tf),
+    passed through to the SRP stage."""
     from sift_spark.operators.text_analysis import _doc_srp_wide
 
-    # r11: read the wide per-doc SRP row directly — the long-format
+    # read the wide per-doc SRP row directly — the long-format
     # (doc_id, dim, v) round-trip (map-side stack unpivot, then a
-    # doc-keyed collect_list re-assembly) cost one full exchange over
-    # d× the rows for values that were already per-doc columns.
+    # doc-keyed collect_list re-assembly) would cost one full exchange
+    # over d× the rows for values that are already per-doc columns.
     # Identical vectors: dims are emitted in index order either way,
     # and the zero-norm filter is the same sum of squares.
     d = 16

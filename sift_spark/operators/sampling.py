@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sift_spark.functions.core import hash64
+from sift_spark.functions.core import guards_tf, hash64
 
 
 def hash_bucket(key: Column, salt: str = "sample", n: int = 100) -> Column:
@@ -164,6 +164,7 @@ def weighted_sample(df: DataFrame, k: int = 100, key_col: str = "doc_id",
     )
 
 
+@guards_tf
 def dsir_importance_weights(docs: DataFrame, target_lang: str = "en",
                             smoothing: float = 1.0, k: int = 100,
                             tf: DataFrame | None = None) -> DataFrame:
@@ -184,47 +185,33 @@ def dsir_importance_weights(docs: DataFrame, target_lang: str = "en",
     and the final top-k is TakeOrderedAndProject — no corpus-wide
     sort, no driver loop.
 
-    ``tf``: optional shared (doc_id, term, tf) posting artifact; the
-    whole operator then runs on posting rows, never the token stream:
-    the frequency tables are integer-exact re-aggregates (raw: Σ tf
-    per term; target: the same over an AQE-planned doc_id join), and
-    the per-doc score is the WEIGHTED average Σ tf·lr / Σ tf in both
-    Spark paths — same value as the per-token average up to float
-    summation order, which the 6dp edge rounding absorbs. The DuckDB
-    oracle deliberately computes the PER-TOKEN form avg(lr) over the
-    token stream (mathematically equal, structurally independent —
-    see the oracle_ops note); do NOT "align" it back to the weighted
-    shape.
+    ``tf``: optional posting table (see models.text.doc_term_tf). The
+    raw frequency table is an integer-exact re-aggregate of it (Σ tf
+    per term); with a passed ``tf`` the target table is too (the same
+    sum over an AQE-planned doc_id join), so the operator never reads
+    the token stream. The per-doc score is the WEIGHTED average
+    Σ tf·lr / Σ tf in both Spark paths — same value as the per-token
+    average up to float summation order, which the 6dp edge rounding
+    absorbs. The DuckDB oracle deliberately computes the PER-TOKEN
+    form avg(lr) over the token stream (mathematically equal,
+    structurally independent — see the oracle_ops note); do NOT
+    "align" it back to the weighted shape.
     """
-    from sift_spark.functions.core import is_token_artifact
-    from sift_spark.models.text import tokens
+    from sift_spark.models.text import doc_term_tf, tokens_col
 
-    # shortcut on the session's provenance-tagged token artifact (the
-    # frame carries every original column plus ``toks``): the regex
-    # split is the dominant per-pass cost and the cached arrays are
-    # semantics-identical (see models.text.with_tokens)
     if tf is None:
-        toks_col = (
-            F.col("toks") if is_token_artifact(docs) else tokens(F.col("text"))
-        )
-        tf = (
-            docs.select("doc_id", F.explode(toks_col).alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
+        tf = doc_term_tf(docs)
         # the lang column is INLINE on docs — the target table needs
         # no join at all: filter then count token occurrences (= Σ tf
-        # over target docs, integer-identical to the posting-side sum)
+        # over target docs, integer-identical to the posting-side sum);
+        # tokens_col reads the session token artifact when docs has it
         tgt_tf = (
             docs.where(F.col("lang") == target_lang)
-            .select(F.explode(toks_col).alias("tok"))
+            .select(F.explode(tokens_col(docs)).alias("tok"))
             .groupBy("tok")
             .agg(F.count(F.lit(1)).alias("nt"))
         )
     else:
-        from sift_spark.functions.core import check_tf_provenance
-
-        check_tf_provenance(docs, tf, "dsir_importance_weights")
         # target-lang doc ids join the posting table UNHINTED: the
         # filtered doc set is corpus-proportional (every target-lang
         # doc), so a forced broadcast would bypass

@@ -158,6 +158,34 @@ def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
     return topk.withColumn("rank", F.row_number().over(w))
 
 
+def _tfidf_weights(docs: DataFrame, min_df: int, tf: DataFrame | None) -> DataFrame:
+    """The tf-idf weight table (doc_id, term, w = sqrt(tf)·idf) over the
+    posting table ``tf`` (built here when None, see
+    models.text.doc_term_tf); terms with df <= ``min_df`` have no idf
+    and drop out."""
+    from sift_spark.models.text import doc_term_tf, term_idfs
+
+    if tf is None:
+        tf = doc_term_tf(docs)
+    return tf.join(term_idfs(docs, min_df=min_df, tf=tf), "term").select(
+        "doc_id", "term", (F.sqrt(F.col("tf")) * F.col("idf")).alias("w")
+    )
+
+
+def _top_terms(w: DataFrame, k: int) -> DataFrame:
+    """(doc_id, term): each doc's ``k`` heaviest terms of a
+    :func:`_tfidf_weights` table, ranked (w desc, term asc). The rank
+    window partitions by doc_id on post-aggregation rows."""
+    from pyspark.sql import Window
+
+    rk = Window.partitionBy("doc_id").orderBy(F.col("w").desc(), F.col("term").asc())
+    return (
+        w.withColumn("rn", F.row_number().over(rk))
+        .where(F.col("rn") <= k)
+        .select("doc_id", "term")
+    )
+
+
 @guards_tf
 def tfidf_search(docs: DataFrame, query_terms: tuple[str, ...], k: int = 10,
                  min_df: int = 2, tf: DataFrame | None = None) -> DataFrame:
@@ -170,26 +198,8 @@ def tfidf_search(docs: DataFrame, query_terms: tuple[str, ...], k: int = 10,
     norm from the full vector, query-term filter before the final
     top-k — no full-corpus sort, just one aggregation + window.
 
-    ``tf``: optional pre-materialized (doc_id, term, tf) posting
-    table (the session's shared artifact, queries._docs_tf); both the
-    weight table and the idf side then re-aggregate it — zero corpus
-    passes of the operator's own (was two: the tf explode + term_idfs'
-    distinct explode)."""
-    from sift_spark.models.text import term_idfs, with_tokens
-
-    idfs = term_idfs(docs, min_df=min_df, tf=tf)
-    if tf is None:
-        tf = (
-            with_tokens(docs)
-            .select("doc_id", F.explode(F.col("toks")).alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-    w = local_persist(  # materialize: norm + query-score consumers race (r11)
-        tf.join(idfs, "term").select(
-            "doc_id", "term", (F.sqrt(F.col("tf")) * F.col("idf")).alias("w")
-        )
-    )
+    ``tf``: optional posting table (see models.text.doc_term_tf)."""
+    w = local_persist(_tfidf_weights(docs, min_df, tf))  # norm + query-score consumers race
     norms = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("norm"))
     qscore = (
         w.where(F.col("term").isin(*query_terms))
@@ -217,17 +227,13 @@ def bm25_search(docs: DataFrame, query_terms: tuple[str, ...], k: int = 10,
     term filter pushes all the way to the token explode and the big
     tf aggregation runs on query-term rows only. Doc lengths are a
     map-side size(); N and avglen ride a 1-row broadcast."""
-    from sift_spark.models.text import with_tokens
+    from sift_spark.models.text import doc_term_tf, with_tokens
 
-    t = with_tokens(docs)
-    lens = t.select("doc_id", F.size("toks").alias("dl"))
-    qtf = (
-        t.select("doc_id", F.explode("toks").alias("term"))
-        .where(F.col("term").isin(*query_terms))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
+    lens = with_tokens(docs).select("doc_id", F.size("toks").alias("dl"))
+    # Catalyst pushes the term filter below the (doc_id, term) count
+    qtf = local_persist(  # df + scored consumers would each re-run the explode
+        doc_term_tf(docs).where(F.col("term").isin(*query_terms))
     )
-    qtf = local_persist(qtf)  # df + scored consumers each re-ran the explode (r11)
     df = qtf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     totals = lens.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avg_dl")
@@ -326,24 +332,17 @@ def unigram_logprob(docs: DataFrame, tf: DataFrame | None = None) -> DataFrame:
     vocab-sized, so the join back to the token stream is hash-keyed
     on the term and broadcastable for bounded vocabularies.
 
-    ``tf``: optional shared (doc_id, term, tf) posting artifact; the
-    whole operator is then integer-exact re-aggregates of it plus one
+    Everything runs on posting rows (``tf``: optional posting table,
+    see models.text.doc_term_tf): integer-exact re-aggregates plus one
     posting-sized score join. The per-doc average is the WEIGHTED
-    form Σ tf·lp / Σ tf in BOTH paths (and in the oracle), so the
-    score join carries one row per (doc, term) instead of one per
-    token — same value as the per-token average up to float
-    summation order, which the 6dp edge rounding already absorbs
-    (the artifact changes where rows come from, never what the
-    operator computes)."""
-    from sift_spark.models.text import with_tokens
+    form Σ tf·lp / Σ tf (also in the oracle), so the score join
+    carries one row per (doc, term) instead of one per token — same
+    value as the per-token average up to float summation order,
+    which the 6dp edge rounding absorbs."""
+    from sift_spark.models.text import doc_term_tf
 
     if tf is None:
-        tf = (
-            with_tokens(docs)
-            .select("doc_id", F.explode("toks").alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
+        tf = doc_term_tf(docs)
     ctf = tf.groupBy("term").agg(F.sum("tf").alias("ctf"))
     total = ctf.agg(F.sum("ctf").alias("t"))
     p = ctf.crossJoin(F.broadcast(total)).select(
@@ -418,16 +417,15 @@ def doc_entropy(docs: DataFrame) -> DataFrame:
     boilerplate text; pairs with ``repetition_stats`` as a
     Gopher-style filter signal.
 
-    Two keyed aggregations, both on doc-local keys (doc_id, tok) then
-    doc_id — no corpus-wide state, so it scales with the scan."""
-    from sift_spark.models.text import tokens_col
+    Two keyed aggregations, both on doc-local keys (the posting
+    table's (doc_id, term), then doc_id) — no corpus-wide state, so
+    it scales with the scan."""
+    from sift_spark.models.text import doc_term_tf
 
-    tok = docs.select("doc_id", F.explode(tokens_col(docs)).alias("tok"))
-    tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
-    return tf.groupBy("doc_id").agg(
-        F.sum("c").alias("n_tokens"),
+    return doc_term_tf(docs).groupBy("doc_id").agg(
+        F.sum("tf").alias("n_tokens"),
         F.round(
-            F.log(F.sum("c")) - F.sum(F.col("c") * F.log("c")) / F.sum("c"), 6
+            F.log(F.sum("tf")) - F.sum(F.col("tf") * F.log("tf")) / F.sum("tf"), 6
         ).alias("entropy"),
     )
 
@@ -687,10 +685,12 @@ def term_collocations(docs: DataFrame, min_count: int = 5,
     corpus scale the unigram table is Zipf-skewed, which AQE skew
     handling splits.
 
-    ``tf``: optional shared (doc_id, term, tf) posting artifact — the
+    ``tf``: optional posting table (see models.text.doc_term_tf) — the
     unigram counts and the token total become integer re-aggregates
     of it (Σ tf: exactly the explode's integers), so only the bigram
-    pass reads the token stream."""
+    pass reads the token stream. Without it the unigrams are counted
+    straight from the token stream: one term-keyed shuffle, where
+    building postings first would add a (doc_id, term) one."""
     from sift_spark.models.text import with_tokens
 
     t = with_tokens(docs)
@@ -746,46 +746,10 @@ def doc_top_terms(docs: DataFrame, k: int = 3, min_df: int = 2,
                   tf: DataFrame | None = None) -> DataFrame:
     """Per-document top-k tf-idf terms as a sorted CSV column
     (doc_id, top_terms): terms ranked by weight desc then term asc —
-    the per-doc profile a search/labeling pipeline exports. Rank
-    window partitions by doc_id on post-aggregation rows.
+    the per-doc profile a search/labeling pipeline exports.
 
-    ``tf``: optional pre-materialized (doc_id, term, tf) posting
-    table (the session's shared artifact, queries._docs_tf). df/idf
-    are then integer re-aggregates OF it (df = per-term row count —
-    exact, tf is one row per (doc, term), the same integers term_idfs
-    computes from its own corpus scan), so the operator runs ZERO
-    corpus passes of its own (was two: the tf explode + term_idfs'
-    distinct explode; sf1 measured 4.8s vs DuckDB 1.4s)."""
-    from pyspark.sql import Window
-
-    from sift_spark.models.text import term_idfs, with_tokens
-
-    if tf is None:
-        tf = (
-            with_tokens(docs)
-            .select("doc_id", F.explode(F.col("toks")).alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        idf = term_idfs(docs, min_df=min_df)
-    else:
-        n = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-        idf = (
-            tf.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") > min_df)
-            .crossJoin(n)
-            .select(
-                "term",
-                F.round(F.log(F.col("n_docs") / F.col("df")), 6).alias("idf"),
-            )
-        )
-    w = tf.join(idf, "term").select(
-        "doc_id", "term", (F.sqrt(F.col("tf")) * F.col("idf")).alias("wt")
-    )
-    rk = Window.partitionBy("doc_id").orderBy(F.col("wt").desc(), F.col("term").asc())
-    top = w.withColumn("rn", F.row_number().over(rk)).where(F.col("rn") <= k)
-    return top.groupBy("doc_id").agg(
+    ``tf``: optional posting table (see models.text.doc_term_tf)."""
+    return _top_terms(_tfidf_weights(docs, min_df, tf), k).groupBy("doc_id").agg(
         F.array_join(F.sort_array(F.collect_list("term")), ",").alias("top_terms")
     )
 
@@ -1303,32 +1267,22 @@ def _doc_srp_wide(docs: DataFrame, d: int = 16, min_df: int = 2,
     no stored model, bit-identical on any engine or cluster layout.
     Output wide (doc_id, v0..v{d-1}) with each v rounded 6dp.
 
-    Shape: ONE corpus pass — the (doc, term, tf) aggregate — with
-    everything vocab-sized derived FROM it: df = per-term row count
-    of tf (exact — tf is one row per (doc, term), the same integers
-    term_idfs computes from its own corpus scan), idf = ln(N/df),
-    and the per-(term, dim) md5 signs computed once on the vocab
-    table as an array column, NOT per posting row (the earlier
-    per-row explode evaluated hash31 on (doc, term) × d instances —
-    240M md5 calls at sf1, measured ~6s of the pass). The d per-dim
-    sums run as one wide (doc)-keyed aggregate (map-side combinable)
-    and unpivot to long format map-side. No driver state, no UDF.
+    Shape: ONE corpus pass — the posting table — with everything
+    vocab-sized derived FROM it: idf (models.text.term_idfs over the
+    postings) and the per-(term, dim) md5 signs, computed once per
+    vocab row, NOT per posting row (per posting row, hash31 runs on
+    (doc, term) × d instances — 240M md5 calls at sf1, measured ~6s
+    of the pass). The d per-dim sums run as one wide (doc)-keyed
+    aggregate (map-side combinable). No driver state, no UDF.
 
-    ``tf``: optional pre-materialized (doc_id, term, tf) posting
-    table (the session's shared artifact, queries._docs_tf) — the
-    corpus pass is then skipped entirely and the caller owns the
-    table's lifecycle (no persist here).
+    ``tf``: optional posting table (see models.text.doc_term_tf); a
+    passed table is not persisted here — the caller owns its
+    lifecycle.
     """
-    from sift_spark.models.text import with_tokens
+    from sift_spark.models.text import doc_term_tf, term_idfs
 
     if tf is None:
-        tf = (
-            with_tokens(docs)
-            .select("doc_id", F.explode("toks").alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        tf = local_persist(tf, eager=False)  # lazy: vocab's eager count fills it
+        tf = local_persist(doc_term_tf(docs), eager=False)  # lazy: vocab's eager count fills it
     # signs as d PRIMITIVE double columns, not an array: an array
     # column on the probe side of the join boxes d doubles per
     # posting row through the aggregate (GenericArrayData), measured
@@ -1341,7 +1295,6 @@ def _doc_srp_wide(docs: DataFrame, d: int = 16, min_df: int = 2,
         .alias(f"s{i}")
         for i in range(d)
     ]
-    n = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
     # persisted: the cache boundary stops the optimizer from inlining
     # the d md5 sign expressions into the join/aggregate, where they
     # would re-evaluate per POSTING row instead of per vocab row
@@ -1349,18 +1302,9 @@ def _doc_srp_wide(docs: DataFrame, d: int = 16, min_df: int = 2,
     # job: counting vocab also fills tf's cache underneath it (tf →
     # vocab is the only consumer until then), so the posting join
     # reads both caches warm without a second scheduled job.
-    vocab = (
-        tf.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") > min_df)
-        .crossJoin(n)
-        .select(
-            "term",
-            F.round(F.log(F.col("n_docs") / F.col("df")), 6).alias("idf"),
-            *signs,
-        )
+    vocab = local_persist(
+        term_idfs(docs, min_df=min_df, tf=tf).select("term", "idf", *signs)
     )
-    vocab = local_persist(vocab)
     joined = tf.join(vocab, "term").select(
         "doc_id",
         (F.col("tf") * F.col("idf")).alias("w"),
@@ -1379,9 +1323,9 @@ def doc_srp_embeddings(docs: DataFrame, d: int = 16, min_df: int = 2,
     """Long-format (doc_id, dim, v) SRP embeddings — the registered
     query contract. See :func:`_doc_srp_wide` for the computation;
     the unpivot here is map-side (stack). Vector consumers
-    (doc_embedding_dup_pairs) read the wide frame directly instead of
-    regrouping these rows (r11: the unpivot + doc-keyed re-assembly
-    round-trip was a full extra exchange over d× the rows)."""
+    (doc_embedding_dup_pairs) read the wide frame directly: the
+    unpivot + doc-keyed re-assembly round-trip would be a full extra
+    exchange over d× the rows."""
     wide = _doc_srp_wide(docs, d, min_df, tf)
     stack = ", ".join(f"{i}, v{i}" for i in range(d))
     return wide.select(
@@ -1401,9 +1345,10 @@ def corpus_datacard(docs: DataFrame, tf: DataFrame | None = None) -> DataFrame:
     aggregate is its own pass over the lazy ``t`` frame, so WITHOUT
     the session artifacts the corpus is re-tokenized five times
     (measured 6-10s at sf1) — pass the tokenized frame (the map
-    passes then read cached arrays) and ``tf`` (the vocab count
-    becomes a distinct-count over posting rows: the same terms the
-    explode yields, ~7× fewer rows at sf1)."""
+    passes then read cached arrays) and ``tf`` (the posting table,
+    see models.text.doc_term_tf: the vocab count becomes a
+    distinct-count over posting rows, the same terms the explode
+    yields, ~7× fewer rows at sf1)."""
     from sift_spark.models.text import tokens_col
 
     t = docs.select(
@@ -1529,13 +1474,10 @@ def retrieval_triples(docs: DataFrame, n_query_terms: int = 2, k_neg: int = 2,
     BM25-negative mining step of dual-encoder training. Output
     (doc_id, query_terms, neg_rank, neg_id, neg_score).
 
-    Shape: ONE corpus tokenize pass — the (doc, term) tf table is
-    persisted and every derived table (document frequencies, idf, the
-    tf-idf weights) is an aggregate or join OVER it: df = per-term
-    row count of tf (exact — tf is one row per (doc, term)), idf =
-    ln(N/df), bit-identical to the term_idfs operator it previously
-    recomputed the corpus for (the lazy DAG re-tokenized the corpus
-    ~4× across the wts/df_caps/idf branches; measured 8.3s vs DuckDB
+    Shape: ONE corpus tokenize pass — the posting table is persisted
+    and every derived table (document frequencies, idf, the tf-idf
+    weights) is an aggregate or join OVER it (a lazy posting table
+    re-tokenizes the corpus once per branch; measured 8.3s vs DuckDB
     3.3s at sf1). Then the per-doc top-terms window (post-agg rows),
     ONE term-keyed join query-terms × posting-lists scored by
     sqrt(tf)·idf and a per-query top-k window. ``max_df`` caps the
@@ -1543,48 +1485,27 @@ def retrieval_triples(docs: DataFrame, n_query_terms: int = 2, k_neg: int = 2,
     stopword-like query term would otherwise fan out to the whole
     corpus).
 
-    ``tf``: optional pre-materialized (doc_id, term, tf) posting
-    table (the session's shared artifact, queries._docs_tf) — skips
-    the corpus pass; the caller owns that table's lifecycle."""
+    ``tf``: optional posting table (see models.text.doc_term_tf); a
+    passed table is not persisted here — the caller owns its
+    lifecycle."""
     from pyspark.sql import Window
 
-    from sift_spark.models.text import with_tokens
+    from sift_spark.models.text import doc_term_tf
 
     if tf is None:
-        tf = (
-            with_tokens(docs)
-            .select("doc_id", F.explode(F.col("toks")).alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        tf = local_persist(tf)  # materialize: wts / df branches race a lazy cache
-    dfs = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    idf = (
-        dfs.where(F.col("df") > min_df)
-        .crossJoin(n)
-        .select("term", F.round(F.log(F.col("n_docs") / F.col("df")), 6).alias("idf"))
+        tf = local_persist(doc_term_tf(docs))  # materialize: wts / df branches race a lazy cache
+    wts = local_persist(_tfidf_weights(docs, min_df, tf))  # qterms + postings race a lazy cache
+    qterms = _top_terms(wts, n_query_terms).select(F.col("doc_id").alias("q_doc"), "term")
+    capped = (
+        tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+        .where(F.col("df") <= max_df).select("term")
     )
-    wts = local_persist(  # materialize: qterms + postings race a lazy cache
-        tf.join(idf, "term").select(
-            "doc_id", "term", (F.sqrt(F.col("tf")) * F.col("idf")).alias("wt")
-        )
-    )
-    rk = Window.partitionBy("doc_id").orderBy(F.col("wt").desc(), F.col("term").asc())
-    qterms = (
-        wts.withColumn("rn", F.row_number().over(rk))
-        .where(F.col("rn") <= n_query_terms)
-        .select(F.col("doc_id").alias("q_doc"), "term")
-    )
-    postings = (
-        wts.join(dfs.where(F.col("df") <= max_df).select("term"), "term")
-        .select("term", F.col("doc_id").alias("cand"), "wt")
-    )
+    postings = wts.join(capped, "term").select("term", F.col("doc_id").alias("cand"), "w")
     scored = (
         qterms.join(postings, "term")
         .where(F.col("cand") != F.col("q_doc"))
         .groupBy("q_doc", "cand")
-        .agg(F.round(F.sum("wt"), 6).alias("neg_score"))
+        .agg(F.round(F.sum("w"), 6).alias("neg_score"))
     )
     nk = Window.partitionBy("q_doc").orderBy(
         F.col("neg_score").desc(), F.col("cand").asc()
@@ -1617,21 +1538,25 @@ def corpus_topics(docs: DataFrame, sign_dims: int = 6, k_terms: int = 5,
     top_terms) for buckets holding >= ``min_docs`` docs — the
     "what is in my corpus" inspection artifact.
 
-    Shape: SRP sums (one (doc,dim) aggregate, persisted doc-sized),
-    map-side sign packing, ONE (topic, term) tf aggregate — the
-    corpus-wide term counts and totals are integer re-aggregates OF
-    the topic_tf table (ctf = Σ_topics ttf, exact), not a second
-    corpus explode+join pass (the lazy DAG ran the tokenize+join
-    twice; measured 7.2s vs DuckDB 2.0s at sf1) — then one per-topic
-    rank window on post-agg rows."""
+    Shape: ONE posting table (``tf``, see models.text.doc_term_tf;
+    built and lazily persisted here when None) feeds both the SRP
+    sums and the (topic, term) counts; map-side sign packing, ONE
+    (topic, term) tf aggregate — the corpus-wide term counts and
+    totals are integer re-aggregates OF the topic_tf table
+    (ctf = Σ_topics ttf, exact), not a second corpus explode+join
+    pass (measured 7.2s vs DuckDB 2.0s at sf1 when the lazy DAG ran
+    the tokenize+join twice) — then one per-topic rank window on
+    post-agg rows."""
     from pyspark.sql import Window
 
-    from sift_spark.models.text import with_tokens
+    from sift_spark.models.text import doc_term_tf
 
+    if tf is None:
+        tf = local_persist(doc_term_tf(docs), eager=False)  # lazy: the SRP vocab count fills it
     # only the first sign_dims projections are consumed — compute just
-    # those (per-dim values are independent, so this is exact). r11:
-    # read the WIDE per-doc SRP row and sign-pack map-side — the long
-    # format's unpivot + doc-keyed regroup was a full exchange over
+    # those (per-dim values are independent, so this is exact). The
+    # WIDE per-doc SRP row is sign-packed map-side: the long format's
+    # unpivot + doc-keyed regroup would be a full exchange over
     # sign_dims× the rows for values already sitting in one row.
     wide = _doc_srp_wide(docs, d=sign_dims, tf=tf)
     topic = (
@@ -1645,22 +1570,11 @@ def corpus_topics(docs: DataFrame, sign_dims: int = 6, k_terms: int = 5,
         )
     )
     topic = local_persist(topic, eager=False)  # lazy: topic_tf's count fills it
-    # with the shared posting artifact the (topic, term) counts are a
-    # re-aggregate of tf (Σ tf over the doc→topic join — identical
-    # integers), never a second corpus explode
-    if tf is None:
-        tok = (
-            with_tokens(docs)
-            .select("doc_id", F.explode("toks").alias("term"), F.lit(1).alias("tf"))
-            .join(topic, "doc_id")
-        )
-    else:
-        tok = tf.join(topic, "doc_id")
     # ONE eager job: materializing topic_tf fills topic's cache
     # through the join underneath it, and its three consumers (lift,
     # totals, corpus counts) plus the sizes agg then read warm caches
     topic_tf = local_persist(
-        tok.groupBy("topic", "term").agg(F.sum("tf").alias("ttf"))
+        tf.join(topic, "doc_id").groupBy("topic", "term").agg(F.sum("tf").alias("ttf"))
     )
     topic_tot = topic_tf.groupBy("topic").agg(F.sum("ttf").alias("ttot"))
     corpus_tf = topic_tf.groupBy("term").agg(F.sum("ttf").alias("ctf"))
@@ -1708,7 +1622,7 @@ def windowed_pmi(docs: DataFrame, window: int = 3, min_count: int = 5,
     unigram counts, and the two totals are all map-side-combinable
     aggregates with the scalars broadcast.
 
-    ``tf``: optional shared (doc_id, term, tf) posting artifact — the
+    ``tf``: optional posting table (see models.text.doc_term_tf) — the
     unigram counts and token total become integer re-aggregates of it
     (Σ tf: exactly the explode's integers); the windowed pair pass
     still reads the token arrays (order matters there)."""
@@ -1785,9 +1699,9 @@ def token_zipf_fit(docs: DataFrame, max_rank: int = 1000,
     collapsing = the distribution is not power-law at all), and the
     single-row report is cheap enough to run per ingest batch.
 
-    Shape: one term aggregate (branches from the shared tf posting
-    artifact when passed — zero corpus passes), a top-``max_rank``
-    selection planned as TakeOrderedAndProject (per-partition top-k +
+    Shape: one term aggregate (over the posting table when ``tf`` is
+    passed, see models.text.doc_term_tf — zero corpus passes), a
+    top-``max_rank`` selection planned as TakeOrderedAndProject (per-partition top-k +
     one k·P-row merge — the full vocabulary, 1e8-1e9 terms for a web
     corpus, never lands on one task; rank is assigned post-limit over
     ≤``max_rank`` rows), then one 1-row OLS aggregate (covar/var
@@ -1888,24 +1802,17 @@ def vocab_coverage(docs: DataFrame, vocab_size: int = 5000,
     One row: (n_vocab, heldout_tokens, covered_tokens, coverage,
     oov_rate).
 
-    Branches from the shared tf posting artifact when passed (zero
-    corpus passes). The vocab is K rows → broadcast semi-join onto the
-    held-out postings; the top-K selection plans as
+    Runs on posting rows (``tf``: optional posting table, see
+    models.text.doc_term_tf). The vocab is K rows → broadcast
+    semi-join onto the held-out postings; the top-K selection plans as
     TakeOrderedAndProject (per-partition top-k + one k·P-row merge —
     the full train vocabulary never lands on one task), and the corpus
     is never globally sorted.
     """
-    from sift_spark.models.text import with_tokens
+    from sift_spark.models.text import doc_term_tf
 
     if tf is None:
-        from sift_spark.functions.core import tag_tf
-
-        tf = tag_tf(
-            with_tokens(docs)
-            .select("doc_id", F.explode("toks").alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
+        tf = doc_term_tf(docs)
     train = tf.where(F.col("doc_id") % heldout_mod != 0)
     heldout = tf.where(F.col("doc_id") % heldout_mod == 0)
     totals = train.groupBy("term").agg(F.sum("tf").alias("f"))

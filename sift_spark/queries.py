@@ -93,21 +93,16 @@ def _docs_shingles(spark, sf_dir, n=3):
     return shingles(_docs_tokenized(spark, sf_dir), n)
 
 
-# The (doc_id, term, tf) posting table: doc_srp_embeddings /
-# corpus_topics / retrieval_triples (and the whole tf-idf family) each
-# recomputed this identical aggregate from their own corpus pass; a
-# production pipeline materializes the posting/tf table once.
+# The (doc_id, term, tf) posting table (models.text.doc_term_tf) over
+# the token artifact, tagged with the dataset for the tf provenance
+# guard: the whole tf-idf family (search, srp, topics, retrieval,
+# unigram/dsir scoring, vocab stats) reads it instead of re-counting
+# the token stream per query.
 @session_artifact(query="corpus_tf")
 def _docs_tf(spark, sf_dir):
     from sift_spark.functions.core import tag_tf
 
-    return tag_tf(
-        _docs_tokenized(spark, sf_dir)
-        .select("doc_id", F.explode("toks").alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf")),
-        dataset=sf_dir,
-    )
+    return tag_tf(TX.doc_term_tf(_docs_tokenized(spark, sf_dir)), dataset=sf_dir)
 
 
 # The full-corpus MinHash band table at the catalog's standard banding

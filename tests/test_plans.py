@@ -290,6 +290,62 @@ def test_dedup_family_plan_shape(spark, name):
     assert got == DEDUP_PLAN_PINS[name]
 
 
+# Executed-plan node counts of the text family at SF_SMOKE, as
+# (ShuffleExchange, SortMergeJoin, BroadcastHashJoin, HashAggregate,
+# Window). Recorded while every tf-accepting operator still wrote its
+# own (doc_id, term, tf) posting build, idf and sqrt(tf)·idf weight
+# table, so the shared builders must reproduce each physical shape
+# exactly. Plain names are registry queries, which read the session's
+# shared tf artifact; names ending in "()" are direct calls on the
+# documents with tf=None, the path that builds its own posting table.
+# The walk includes the plans of persisted intermediates.
+TEXT_PLAN_PINS = {
+    "tfidf_search": (16, 0, 3, 20, 1),
+    "unigram_logprob": (10, 0, 1, 14, 0),
+    "doc_top_terms": (8, 0, 1, 8, 1),
+    "doc_srp_embeddings": (8, 0, 1, 10, 0),
+    "retrieval_triples": (28, 0, 6, 30, 3),
+    "corpus_topics": (58, 0, 12, 76, 1),
+    "vocab_coverage": (12, 0, 1, 18, 0),
+    "dsir_weights": (18, 2, 3, 22, 0),
+    "doc_embedding_dup_pairs": (16, 0, 2, 20, 0),
+    "corpus_tf": (2, 0, 0, 2, 0),
+    "term_idfs": (4, 0, 0, 6, 0),
+    "token_zipf_fit": (3, 0, 0, 6, 1),
+    "entity_mention_tf": (9, 0, 2, 8, 1),
+    "bm25_search": (9, 0, 2, 10, 1),
+    "doc_entropy": (3, 0, 0, 4, 0),
+    "unigram_logprob()": (7, 0, 1, 14, 0),
+    "doc_srp_embeddings()": (5, 0, 1, 10, 0),
+    "retrieval_triples()": (18, 0, 6, 30, 3),
+    "vocab_coverage()": (8, 0, 1, 18, 0),
+    "dsir_importance_weights()": (9, 0, 3, 18, 0),
+}
+
+
+def _text_frame(spark, name):
+    """The frame a TEXT_PLAN_PINS entry pins (see the table above)."""
+    from sift_spark.operators import sampling
+    from sift_spark.operators import text_analysis as TA
+    from sift_spark.queries import QUERIES
+
+    if not name.endswith("()"):
+        return QUERIES[name](spark, SF_SMOKE)
+    op = name[:-2]
+    fn = sampling.dsir_importance_weights if op == "dsir_importance_weights" else getattr(TA, op)
+    return fn(spark.read.parquet(f"{SF_SMOKE}/documents.parquet"))
+
+
+@pytest.mark.parametrize("name", list(TEXT_PLAN_PINS))
+def test_text_family_plan_shape(spark, name):
+    got = _node_counts(
+        lambda: _text_frame(spark, name),
+        ("ShuffleExchangeExec", "SortMergeJoinExec", "BroadcastHashJoinExec",
+         "HashAggregateExec", "WindowExec"),
+    )
+    assert got == TEXT_PLAN_PINS[name]
+
+
 def test_q6_all_predicates_pushed(spark):
     from sift_spark.operators.relational import q6_forecast_revenue
 
