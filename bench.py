@@ -25,7 +25,7 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from sift_spark.caching import ARTIFACTS, release_local_caches
     from sift_spark.queries import QUERIES
-    from sift_spark.session import get_spark, shuffle_partitions_for
+    from sift_spark.session import codegen_compiles, get_spark, shuffle_partitions_for
 
     # size-aware reduce parallelism: ~16MB/partition clamped [8, cpus]
     # — full core count at sf1+, no 32-task stages on a 100MB input
@@ -263,6 +263,10 @@ def main() -> None:
     times: dict[str, float] = {}
     cold: dict[str, float] = {}
     n_jobs: dict[str, int] = {}
+    # Janino compiles per rep, [cold, warm] (warm None on artifact
+    # lines): a warm rep that still compiles means its plan's classes
+    # fell out of the generated-class cache
+    compiles: dict[str, list[int | None]] = {}
     total = 0.0
     sc = spark.sparkContext
     # r12 (advice item): builder-LOCAL persists (race-point caches
@@ -284,25 +288,30 @@ def main() -> None:
         # at 60 MB regardless of data) from real data work — the
         # mechanical split behind the sf0.1 aggregate-ratio creep
         sc.setJobGroup(f"bench:{name}", name)
+        c0 = codegen_compiles(spark)
         t0 = time.time()
         df = fn(spark, sf_dir)
         n = df.count()
         dt1 = round(time.time() - t0, 3)
         n_jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"bench:{name}"))
         cold[name] = dt1
+        compiles[name] = [codegen_compiles(spark) - c0, None]
         release_local_caches()  # warm rep must recompute, not cache-read
         if name in artifact_lines:
             dt = dt1
         else:
+            c0 = codegen_compiles(spark)
             t0 = time.time()
             fn(spark, sf_dir).count()
             dt = min(dt1, round(time.time() - t0, 3))
+            compiles[name][1] = codegen_compiles(spark) - c0
             release_local_caches()  # no builder-local storage leaks across lines
         times[name] = dt
         total += dt
         print(
             f"# {name}: {dt:.2f}s warm-min / {dt1:.2f}s cold "
-            f"({n} rows, {n_jobs[name]} jobs)",
+            f"({n} rows, {n_jobs[name]} jobs, compiles cold/warm "
+            f"{compiles[name][0]}/{compiles[name][1]})",
             file=sys.stderr,
         )
 
@@ -368,6 +377,7 @@ def main() -> None:
     full = dict(out)
     full["queries_cold"] = cold
     full["query_jobs"] = n_jobs
+    full["query_compiles"] = compiles
     full["artifact_lines"] = art_lines
     full["artifact_marginal"] = sorted(
         q for q in times

@@ -6,14 +6,20 @@ re-analysis dominates the round cost (measured at sf0.1: the CC
 rounds were plan-analysis-bound, not shuffle-bound). :func:`cut` is
 the one sanctioned way to do it, and it encodes two decisions:
 
-**One job per round, not two.** ``localCheckpoint(eager=True)`` runs
-its own count job, and the loop's convergence probe then runs a
-second job over the materialized blocks — 2 scheduled jobs per round,
-which at small scale IS the floor (the sf0.1 CC family measured 33-39
-jobs/query). ``cut`` defaults to ``eager=False``: the caller's probe
-aggregate becomes the materializing action, the checkpoint blocks are
-written as a side effect of the job the loop was already running, and
-lineage is truncated when it completes. Contract for the lazy form:
+**No separate count job per round.** ``localCheckpoint(eager=True)``
+runs its own count job, and the loop's convergence probe then runs
+another job over the materialized blocks; at small scale scheduled
+jobs ARE the floor (the sf0.1 CC family measured 33-39 jobs/query).
+``cut`` defaults to ``eager=False``: the caller's probe aggregate
+becomes the materializing action, the checkpoint blocks are written
+as a side effect of the job the loop was already running, and lineage
+is truncated when it completes. The lazy form still schedules work at
+the call: the checkpoint builds the frame's RDD there, and under AQE
+that plans the final physical plan, which runs every shuffle stage of
+the frame at the call (one job each). Only the last stage, the one
+that writes the blocks, waits for the probe. Measured in the
+pipeline's ``duplicate_clusters``: 5 jobs inside the edge-list cut,
+then 2 more in its gate ``count()``. Contract for the lazy form:
 the cut frame's FIRST action must be a single full-scan consumer (the
 probe aggregate). A frame consumed by multiple racing stages before
 any full materialization would compute its partitions more than once
@@ -92,11 +98,12 @@ def _ensure_checkpoint_dir(spark) -> None:
 def cut(df: DataFrame, eager: bool = False) -> DataFrame:
     """Truncate ``df``'s lineage per the session checkpoint mode.
 
-    ``eager=False`` (the loop default): no job is scheduled here; the
-    caller's next action (its convergence probe) materializes the
-    blocks. Only valid when that next action is a single full-scan
-    consumer — see the module docstring. ``eager=True``: materialize
-    immediately (multi-consumer frames, one-off cuts outside loops).
+    ``eager=False`` (the loop default): under AQE the frame's shuffle
+    stages run here; the caller's next action (its convergence probe)
+    runs the last stage and writes the blocks. Only valid when that
+    next action is a single full-scan consumer — see the module
+    docstring. ``eager=True``: materialize immediately (multi-consumer
+    frames, one-off cuts outside loops).
 
     In ``reliable`` mode the cut is always eager: a lazy reliable
     checkpoint would leave the pre-cut lineage live inside the probe

@@ -199,18 +199,23 @@ def term_vocab(docs: DataFrame, max_rank: int | None = 10000, min_rank: int | No
 
 def term_idfs(docs: DataFrame, max_ngram: int = 1, lowercase: bool = False, min_df: int = 2,
               tf: DataFrame | None = None) -> DataFrame:
-    """idf = ln(N / df) per term (reference text.py:157 ``TermIdfs``).
-
-    N comes from a 1-row aggregate cross-joined in (broadcast by
-    Catalyst) — no driver-side ``count()`` round trip. ``tf``:
-    optional posting table (see :func:`doc_term_tf`); N still counts
-    ``docs`` (token-less docs belong in N but have no tf rows). This
-    is the one place idf is computed from a posting table.
-    """
+    """idf = ln(N / df) per term (reference text.py:157 ``TermIdfs``),
+    see :func:`with_idf`. ``tf``: optional posting table (see
+    :func:`doc_term_tf`); N still counts ``docs`` (token-less docs
+    belong in N but have no tf rows)."""
     dfs = term_doc_frequencies(docs, max_ngram=max_ngram, lowercase=lowercase, min_df=min_df, tf=tf)
+    return with_idf(dfs, docs).select("term", "idf")
+
+
+def with_idf(rows: DataFrame, docs: DataFrame) -> DataFrame:
+    """``rows`` (any frame with a ``df`` column) plus ``n_docs`` = N,
+    the row count of ``docs``, and idf = round(ln(N / df), 6): the
+    text family's one idf formula. N is a 1-row aggregate cross-joined
+    in (broadcast by Catalyst) — no driver-side ``count()`` round
+    trip."""
     n = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    return dfs.crossJoin(n).select(
-        "term", F.round(F.log(F.col("n_docs") / F.col("df")), 6).alias("idf")
+    return rows.crossJoin(n).withColumn(
+        "idf", F.round(F.log(F.col("n_docs") / F.col("df")), 6)
     )
 
 

@@ -406,16 +406,17 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     Iterative min-label propagation: each node takes the least label
     among itself and its neighbors until fixpoint. Near-dup clusters
     are near-cliques, so this converges in 2-4 rounds regardless of
-    corpus size. Per round: ONE scheduled job — the round's lineage
-    cut is a LAZY checkpoint (functions.lineage.cut) whose
+    corpus size. Per round: no separate count job — the round's
+    lineage cut is a LAZY checkpoint (functions.lineage.cut) whose
     materializing action is the convergence probe itself: the probe
     aggregate full-scans the new label frame, which caches the blocks,
     truncates lineage, and returns the changed-count in the same job
-    (the eager-cut + separate-probe form cost 2 jobs/round and was the
-    measured sf0.1 scheduling floor). The previous label rides along
-    in the new frame so the probe needs no extra join. For long-chain
-    graphs swap in large-star/small-star — same DataFrame skeleton,
-    fewer rounds on high-diameter inputs. Honors
+    (the eager-cut + separate-probe form added a count job per round,
+    at the measured sf0.1 scheduling floor). Under AQE the round's
+    shuffle stages still run at the cut itself. The previous label
+    rides along in the new frame so the probe needs no extra join. For
+    long-chain graphs swap in large-star/small-star — same DataFrame
+    skeleton, fewer rounds on high-diameter inputs. Honors
     ``spark.sift.checkpoint=reliable`` for executor-loss-tolerant
     checkpoints on real clusters.
 
@@ -434,8 +435,10 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     # regrows by one join per round — at sf0.1 the rounds were
     # dominated by Catalyst re-analysis of that growing plan, not by
     # shuffle work. The gate count below is the lazy cut's single
-    # full-scan materializer, so the gate costs no extra job; after it
-    # the blocks are cached for whichever path runs.
+    # full-scan materializer: it writes the blocks, which are then
+    # cached for whichever path runs. Not free: under AQE the cut runs
+    # the candidate-generation shuffle stages at the call (measured in
+    # the pipeline: 5 jobs there, 2 more in the count).
     edges = cut(
         e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     )
@@ -458,7 +461,8 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             .agg(F.min("rep").alias("nrep"))
         )
         # lazy cut: the probe below is the single full-scan consumer
-        # that materializes this round's blocks (1 job, not 2)
+        # that writes this round's blocks (no separate count job; the
+        # round's shuffle stages run at the cut)
         new_labels = cut(
             labels.join(nbr, labels["node"] == nbr["a"], "left")
             .select(
@@ -800,7 +804,8 @@ def duplicate_clusters_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     small-star: neighbors ≤ u link to the min), with per-round
     lineage cuts like the propagation variant. Convergence probe =
     edge-set hash equality; the probe aggregate is the round's
-    materializing action (lazy cut → 1 scheduled job per round).
+    materializing action (lazy cut: no separate count job; under AQE
+    the round's shuffle stages run at the cut).
     Honors ``spark.sift.checkpoint=reliable`` and the same
     ``spark.sift.cc.driverEdgeLimit`` driver gate as
     :func:`duplicate_clusters`.
@@ -808,7 +813,8 @@ def duplicate_clusters_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     from sift_spark.functions.lineage import cut
 
     # lazy cut: the gate count is the single full-scan materializer
-    # (no extra job); round 1's racing star-stages then read cache
+    # (the cut itself runs the shuffle stages under AQE); round 1's
+    # racing star-stages then read cache
     edges = cut(
         pairs.select(F.col("doc1").alias("u"), F.col("doc2").alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -856,7 +862,8 @@ def duplicate_clusters_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     prev_sig = None
     for _ in range(max_iter):
         # lazy cut: the signature probe below is the single full-scan
-        # consumer that materializes the round (1 job, not 2); next
+        # consumer that writes the round's blocks (no separate count
+        # job; the round's shuffle stages run at the cut); next
         # round's racing star-stages then read the cached blocks
         edges = cut(small_star(large_star(edges)))
         # canonical (unordered) edge-set signature: xor of pair hashes

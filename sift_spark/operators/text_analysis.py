@@ -163,13 +163,20 @@ def _tfidf_weights(docs: DataFrame, min_df: int, tf: DataFrame | None) -> DataFr
     posting table ``tf`` (built here when None, see
     models.text.doc_term_tf); terms with df <= ``min_df`` have no idf
     and drop out."""
-    from sift_spark.models.text import doc_term_tf, term_idfs
+    from pyspark.sql import Window
+
+    from sift_spark.models.text import doc_term_tf, term_idfs, with_idf
 
     if tf is None:
-        tf = doc_term_tf(docs)
-    return tf.join(term_idfs(docs, min_df=min_df, tf=tf), "term").select(
-        "doc_id", "term", (F.sqrt(F.col("tf")) * F.col("idf")).alias("w")
-    )
+        # a fresh posting table takes df from a per-term window over
+        # itself: joining term_idfs would aggregate the postings a
+        # second time (its df branch prunes tf, so AQE reuses no
+        # exchange between the two)
+        tf = doc_term_tf(docs).withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
+        weighted = with_idf(tf.where(F.col("df") > min_df), docs)
+    else:
+        weighted = tf.join(term_idfs(docs, min_df=min_df, tf=tf), "term")
+    return weighted.select("doc_id", "term", (F.sqrt(F.col("tf")) * F.col("idf")).alias("w"))
 
 
 def _top_terms(w: DataFrame, k: int) -> DataFrame:

@@ -102,6 +102,16 @@ def get_spark(app_name: str = "sift_spark", shuffle_partitions: int | None = Non
         # Debug-only feature; re-enable when diagnosing an
         # AnalysisException to get user-code call sites back.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Janino-compiled whole-stage classes live in an LRU cache of
+        # 100 by default, less than one warm pass of either perfbench
+        # workload needs, so every pass recompiled every class (then
+        # re-warmed its JIT). 512 holds both working sets: compiles
+        # per warm pass (codegen_compiles) 203-212 → 0 on
+        # models_pipeline_sf0.1 and 83-99 → 0 on catalog_sf0.01,
+        # wall_s 0.81x and 0.84x. Kept bounded: an unbounded cache
+        # over a 200-query sweep run twice held ~2.4k classes, ~260 MB
+        # more heap + 40 MB non-heap.
+        .config("spark.sql.codegen.cache.maxEntries", "512")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -112,3 +122,11 @@ def get_spark(app_name: str = "sift_spark", shuffle_partitions: int | None = Non
 
         ship_package(spark)
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compilations this driver JVM has run so far: each
+    generated-class cache miss compiles once, so the delta across a
+    piece of work counts the classes it could not reuse."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -298,7 +298,10 @@ def test_dedup_family_plan_shape(spark, name):
 # exactly. Plain names are registry queries, which read the session's
 # shared tf artifact; names ending in "()" are direct calls on the
 # documents with tf=None, the path that builds its own posting table.
-# The walk includes the plans of persisted intermediates.
+# The walk includes the plans of persisted intermediates. The
+# tfidf_search() and doc_top_terms() pins were recorded once their
+# posting table fed both the weights and df: one (doc_id, term)
+# aggregate per plan, df from a per-term window.
 TEXT_PLAN_PINS = {
     "tfidf_search": (16, 0, 3, 20, 1),
     "unigram_logprob": (10, 0, 1, 14, 0),
@@ -320,6 +323,8 @@ TEXT_PLAN_PINS = {
     "retrieval_triples()": (18, 0, 6, 30, 3),
     "vocab_coverage()": (8, 0, 1, 18, 0),
     "dsir_importance_weights()": (9, 0, 3, 18, 0),
+    "tfidf_search()": (8, 0, 1, 12, 3),
+    "doc_top_terms()": (4, 0, 0, 4, 2),
 }
 
 
@@ -327,13 +332,16 @@ def _text_frame(spark, name):
     """The frame a TEXT_PLAN_PINS entry pins (see the table above)."""
     from sift_spark.operators import sampling
     from sift_spark.operators import text_analysis as TA
-    from sift_spark.queries import QUERIES
+    from sift_spark.queries import QUERIES, SEARCH_TERMS
 
     if not name.endswith("()"):
         return QUERIES[name](spark, SF_SMOKE)
     op = name[:-2]
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    if op == "tfidf_search":
+        return TA.tfidf_search(docs, SEARCH_TERMS, k=10)
     fn = sampling.dsir_importance_weights if op == "dsir_importance_weights" else getattr(TA, op)
-    return fn(spark.read.parquet(f"{SF_SMOKE}/documents.parquet"))
+    return fn(docs)
 
 
 @pytest.mark.parametrize("name", list(TEXT_PLAN_PINS))
