@@ -288,11 +288,6 @@ def sql_hash64(expr: str) -> str:
     return f"cast(concat('0x', substr(md5({expr}), 1, 15)) as bigint)"
 
 
-def sql_hash31(expr: str) -> str:
-    """DuckDB twin of :func:`hash31`."""
-    return f"({sql_hash64(expr)} % {MOD31})"
-
-
 def sql_entity_set() -> str:
     """SQL literal list of the entity lexicon."""
     return "(" + ", ".join(f"'{t}'" for t in ENTITY_TOKENS) + ")"

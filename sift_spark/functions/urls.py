@@ -17,7 +17,7 @@ twin from the same rule set so the two engines cannot drift.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _SCHEME_RE = "^([A-Za-z][A-Za-z0-9+.-]*)://"
@@ -72,13 +72,6 @@ def normalize_target(col: Column) -> Column:
     """Both trims, the combination every reference link model applies
     to targets (sift/models/links.py:20-24 and throughout)."""
     return trim_link_subsection(trim_link_protocol(col))
-
-
-def normalize_links(links: DataFrame, target_col: str = "target") -> DataFrame:
-    """Link table with normalized targets — run once before the model
-    layer instead of inside each model (the reference re-trims per
-    model, per row, in Python)."""
-    return links.withColumn(target_col, normalize_target(F.col(target_col)))
 
 
 def canonical_url_sql(expr: str) -> str:

@@ -92,10 +92,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
 # --- generic format dispatch -------------------------------------------------
 # the reference reads/writes text-ish corpora (sift/corpora, format.py);
 # a Spark-native engine should speak every built-in columnar/text format

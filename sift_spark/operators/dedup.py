@@ -197,12 +197,6 @@ def _minhash_from_shingles(sh: DataFrame) -> DataFrame:
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
-    """MinHash signatures: (doc_id, mh_0 … mh_{K-1}) via K linear
-    permutations (a·h+b) mod 2^31-1 — one aggregate shuffle total."""
-    return _minhash_from_shingles(shingles(docs, n))
-
-
 def _bands_from_signatures(mh: DataFrame) -> DataFrame:
     # r12: one parsed SQL string instead of per-band Column chains —
     # identical expressions, far fewer Py4J round trips (see

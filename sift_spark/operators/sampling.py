@@ -21,14 +21,6 @@ def hash_bucket(key: Column, salt: str = "sample", n: int = 100) -> Column:
     return hash64(F.concat(F.lit(salt + ":"), key.cast("string"))) % n
 
 
-def deterministic_sample(df: DataFrame, key_col: str, fraction: float,
-                         salt: str = "sample") -> DataFrame:
-    """Keep rows whose hash bucket < round(fraction·100) (percent
-    granularity — use a larger modulus for finer rates; rounding, not
-    truncation: int(0.29*100) is 28 under float error)."""
-    return df.where(hash_bucket(F.col(key_col), salt) < round(fraction * 100))
-
-
 def stratified_sample(df: DataFrame, key_col: str, stratum_col: str,
                       fractions: dict[str, float], salt: str = "sample") -> DataFrame:
     """Per-stratum deterministic sampling (e.g. downsample dominant

@@ -12,7 +12,7 @@ family, ...) launch the materializing Spark job at CONSTRUCTION time,
 and driver-gated algorithms (CC, IRLS, BPE training) run their driver
 steps then too — so ``.explain()``-only consumers still execute heavy
 jobs, and failures can surface at build time rather than action time.
-Plan-capture tooling (scripts/capture_plans.py) accepts this cost.
+The plan-shape manifest (``python -m tests.plan_shapes``) accepts this cost.
 Those builder-local caches are registered in ``sift_spark.caching``;
 call ``release_local_caches()`` after consuming results (bench.py
 does, between timed reps).

@@ -129,19 +129,3 @@ def parse_text_events(lines: DataFrame, line_col: str = "value") -> DataFrame:
         .where(F.col("event_id").isNotNull())
     )
 
-
-def socket_event_stream(spark: SparkSession, host: str = "localhost",
-                        port: int = 9999) -> DataFrame:
-    """Unbounded event stream from a TCP socket of JSON lines — the
-    zero-dependency live-ingest path (nc -lk 9999 < events.jsonl).
-    Spark's socket source is not fault-tolerant (no offsets), so this
-    is a dev/demo source; the parse step is shared with any
-    line-oriented source (files via ``spark.readStream.text`` gets
-    replayability with the same contract)."""
-    raw = (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-    )
-    return parse_text_events(raw)

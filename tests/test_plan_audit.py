@@ -3,13 +3,16 @@ physical plan: no cartesian products and no row-at-a-time Python
 evaluation anywhere, except an explicit, justified allowlist. The
 targeted plan shapes (broadcasts, TakeOrdered, cogroups, pushdown)
 are asserted per-operator in test_plans.py; this sweep exists so a
-NEW query can't silently reintroduce a scale killer."""
+NEW query can't silently reintroduce a scale killer. Every sweep reads
+the one per-session build of each query (``tests.plan_shapes``); a
+manifest regeneration never relaxes these allowlists."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_SMOKE
+from sift_spark.queries import QUERIES
+from tests.plan_shapes import global_windows_unbounded, nested_loop_joins_unbounded, plan_record
 
 # crossJoin(broadcast(1-row aggregate)) is the documented idiom for
 # riding scalar totals into a plan without a driver action; Spark
@@ -33,6 +36,12 @@ BNLJ_OK = {
     "label_spread",
     # SRP doc vectors through the same tiled all-pairs kernel
     "doc_embedding_dup_pairs",
+    # the recall reports score their exact side with
+    # ann_topk_bruteforce's tiled GEMM: the broadcast side is its
+    # Range(0, n_blocks) tile index
+    "ann_recall_report",
+    "ivf_recall_report",
+    "ivfpq_recall_report",
 }
 
 # ArrowEvalPython = vectorized pandas_udf (the sanctioned Python
@@ -63,120 +72,26 @@ GLOBAL_WINDOW_OK: dict[str, str] = {
     "rfm_segments": "size-gated: exact pinned for oracle, auto-approx at scale",
 }
 
-_LIMIT_CLASSES = {
-    "GlobalLimitExec",
-    "TakeOrderedAndProjectExec",
-    "CollectLimitExec",
-    "WindowGroupLimitExec",
-}
-
-
-def _jchildren(jnode):
-    cs = jnode.children()
-    return [cs.apply(i) for i in range(cs.size())]
-
-
-def plan_nodes(jnode):
-    """Every node of a JVM plan tree, descending into the subplans the
-    tree holds as leaves: AQE's current plan, query stages, and the
-    plans of cached relations (a persisted intermediate's build is part
-    of the query's shape)."""
-    yield jnode
-    cls = jnode.getClass().getSimpleName()
-    if cls == "AdaptiveSparkPlanExec":
-        kids = [jnode.executedPlan()]
-    elif cls == "InMemoryTableScanExec":
-        kids = [jnode.relation().cachedPlan()]
-    elif cls == "InMemoryRelation":
-        kids = [jnode.cachedPlan()]
-    elif cls.endswith("QueryStageExec"):
-        kids = [jnode.plan()]
-    else:
-        kids = _jchildren(jnode)
-    for k in kids:
-        yield from plan_nodes(k)
-
-
-def _jbounded(jnode) -> bool:
-    """Is this physical node's OUTPUT provably small? Limits and
-    keyless (1-row) aggregates are; a join is only as bounded as ALL
-    its inputs (the 1-row scalar-broadcast crossJoin does NOT bound
-    the stream side — the false-negative this recursion exists to
-    kill); semi/anti joins bound like their left input; everything
-    else inherits from its children; leaves (scans) are unbounded."""
-    cls = jnode.getClass().getSimpleName()
-    if cls in _LIMIT_CLASSES:
-        return True
-    if cls.endswith("AggregateExec"):
-        try:
-            if jnode.groupingExpressions().isEmpty():
-                return True
-        except Exception:
-            pass
-    kids = _jchildren(jnode)
-    if not kids:
-        return False
-    if "Join" in cls:
-        jt = str(jnode.joinType().toString())
-        if jt in ("LeftSemi", "LeftAnti"):
-            return _jbounded(kids[0])
-    return all(_jbounded(k) for k in kids)
-
-
-def global_windows_unbounded(df) -> list[str]:
-    """Window nodes with EMPTY partitioning whose input subtree is not
-    provably bounded — walked on the real JVM physical-plan tree
-    (sparkPlan, pre-AQE: no AdaptiveSparkPlanExec wrappers, and
-    InMemoryRelation's embedded cached-plan dump can't confuse a text
-    parse because there is no text parse)."""
-    offenders: list[str] = []
-
-    def walk(jnode):
-        cls = jnode.getClass().getSimpleName()
-        if cls in ("WindowExec", "WindowInPandasExec") and jnode.partitionSpec().isEmpty():
-            if not all(_jbounded(k) for k in _jchildren(jnode)):
-                offenders.append(str(jnode.simpleString(3)))
-        for k in _jchildren(jnode):
-            walk(k)
-
-    walk(df._jdf.queryExecution().sparkPlan())
-    return offenders
-
-
-def _names():
-    from sift_spark.queries import QUERIES
-
-    return list(QUERIES)
-
-
-@pytest.mark.parametrize("name", _names())
+@pytest.mark.parametrize("name", list(QUERIES))
 def test_no_scale_killers_in_plan(spark, name):
-    from sift_spark.queries import QUERIES
-
-    df = QUERIES[name](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+    rec = plan_record(spark, name)
+    assert "CartesianProduct" not in rec.plan, f"{name}: cartesian product"
     if name not in ROW_PYTHON_OK:
-        assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
-    if name not in BNLJ_OK and "BroadcastNestedLoopJoin" in plan:
-        # every remaining BNLJ must be the 1-row scalar-broadcast
-        # idiom: a broadcast side that is an aggregate with no
-        # grouping keys (rows=1). Heuristic: the plan must contain a
-        # global (keyless) HashAggregate node.
-        assert "HashAggregate(keys=[], " in plan, (
-            f"{name}: BroadcastNestedLoopJoin without a 1-row "
-            "scalar-aggregate side — likely an accidental cross join"
+        assert "BatchEvalPython" not in rec.plan, f"{name}: row-at-a-time Python UDF"
+    if name not in BNLJ_OK:
+        # every remaining BNLJ must broadcast a provably bounded side,
+        # e.g. the 1-row scalar-aggregate idiom
+        assert not rec.nested_loops_unbounded, (
+            f"{name}: BroadcastNestedLoopJoin over an unbounded build side "
+            f"— likely an accidental cross join: {rec.nested_loops_unbounded}"
         )
 
 
-@pytest.mark.parametrize("name", _names())
+@pytest.mark.parametrize("name", list(QUERIES))
 def test_no_unbounded_global_windows(spark, name):
-    from sift_spark.queries import QUERIES
-
     if name in GLOBAL_WINDOW_OK:
         pytest.skip(f"allowlisted: {GLOBAL_WINDOW_OK[name]}")
-    df = QUERIES[name](spark, SF_SMOKE)
-    bad = global_windows_unbounded(df)
+    bad = plan_record(spark, name).windows_unbounded
     assert not bad, (
         f"{name}: global (unpartitioned) Window over an unbounded input "
         f"— one task gets every row at scale: {bad}"
@@ -212,7 +127,23 @@ def test_global_window_audit_catches_injected_offender(spark):
     assert not global_windows_unbounded(partitioned), "audit flagged a partitioned window"
 
 
-@pytest.mark.parametrize("name", _names())
+def test_nested_loop_audit_catches_injected_cross_join(spark):
+    """The BNLJ audit must flag a cross join of two unbounded frames even
+    when the plan also holds a global count, and accept the 1-row
+    scalar-broadcast idiom — guards the guard."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(1000).withColumn("f", F.col("id") * 2)
+    total = df.agg(F.count("*").alias("n"))
+    offender = df.crossJoin(spark.range(1000).withColumnRenamed("id", "j")).crossJoin(total)
+    assert nested_loop_joins_unbounded(offender), "audit missed an unbounded cross join"
+
+    scalar = df.crossJoin(F.broadcast(total))
+    assert "BroadcastNestedLoopJoin" in scalar._jdf.queryExecution().executedPlan().toString()
+    assert not nested_loop_joins_unbounded(scalar), "audit flagged the 1-row scalar idiom"
+
+
+@pytest.mark.parametrize("name", list(QUERIES))
 def test_output_schema_is_driver_canonicalizable(spark, name):
     """The driver's pandas canonicalizer crashes on array/map/struct
     output columns (r3: embedding_pca ERR'd even the rows check).
@@ -221,12 +152,9 @@ def test_output_schema_is_driver_canonicalizable(spark, name):
     embedding_int8.codes)."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    from sift_spark.queries import QUERIES
-
-    df = QUERIES[name](spark, SF_SMOKE)
     bad = [
         (f.name, f.dataType.simpleString())
-        for f in df.schema.fields
+        for f in plan_record(spark, name).schema.fields
         if isinstance(f.dataType, (ArrayType, MapType, StructType))
     ]
     assert not bad, f"{name}: non-atomic output columns {bad}"

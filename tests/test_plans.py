@@ -1,15 +1,15 @@
 """Plan assertions: pushdown / broadcast / codegen guards for the
 flagship queries (SURVEY §5.4). A perf regression that flips a
 broadcast to a sort-merge join or loses parquet pushdown fails here,
-not in a bench eyeball."""
+not in a bench eyeball. ``test_plan_shape`` pins the node-class counts
+of every registry query and direct frame (tests/plan_shapes.json)."""
 
 from __future__ import annotations
-
-from collections import Counter
 
 import pytest
 
 from tests.conftest import SF_SMOKE
+from tests.plan_shapes import REGENERATE, frame_names, load_manifest, plan_record
 
 
 def _plan(df) -> str:
@@ -117,241 +117,51 @@ def test_pagerank_joins_are_keyed(spark):
     assert plan.count("BroadcastNestedLoopJoin") == 1
 
 
-def _node_counts(build, classes) -> tuple[int, ...]:
-    """Counts of each named physical node class in the executed plan of
-    the frame ``build()`` returns, walking into the plans of persisted
-    intermediates. Builder-local caches are released before the build
-    (another builder's cached subplan would change the shape) and
-    after the count."""
-    from sift_spark.caching import release_local_caches
-    from tests.test_plan_audit import plan_nodes
-
-    release_local_caches()
-    try:
-        plan = build()._jdf.queryExecution().executedPlan()
-        c = Counter(n.getClass().getSimpleName() for n in plan_nodes(plan))
-    finally:
-        release_local_caches()
-    return tuple(c[k] for k in classes)
+def _shape_names():
+    return sorted({*frame_names(), *load_manifest()})
 
 
-# Executed-plan node counts of the comention family at SF_SMOKE, as
-# (ShuffleExchange, SortMergeJoin, BroadcastHashJoin, HashAggregate).
-# Recorded while every builder still wrote its own comention self-join,
-# so the shared edge builders must reproduce each physical shape
-# exactly. The walk includes the plans of persisted intermediates.
-COMENTION_PLAN_PINS = {
-    "entity_pagerank": (60, 10, 12, 98),
-    "entity_hits": (37, 0, 16, 74),
-    "entity_relatedness": (7, 0, 3, 14),
-    "entity_pmi": (10, 0, 3, 20),
-    "comention_triangles": (7, 0, 5, 17),
-    "comention_degrees": (7, 0, 3, 16),
-    "entity_components": (3, 0, 1, 6),
-    "entity_random_walks": (33, 4, 5, 30),
-    "entity_link_prediction": (17, 3, 4, 28),
-    "entity_node2vec_walks": (31, 5, 6, 38),
-}
+@pytest.mark.parametrize("name", _shape_names())
+def test_plan_shape(spark, name):
+    """Every registry query and direct frame keeps the executed-plan node
+    counts pinned in tests/plan_shapes.json (persisted intermediates
+    included): a fold that must keep its physical shape fails here."""
+    pinned = load_manifest()
+    fix = f"regenerate with `{REGENERATE}` and record every moved count, with its reason, in CHANGES.md"
+    assert name in frame_names(), f"{name}: manifest entry without a frame; {fix}"
+    assert name in pinned, f"{name}: no manifest entry; {fix}"
+    assert plan_record(spark, name).counts == pinned[name], f"{name}: plan shape moved; {fix}"
 
 
-@pytest.mark.parametrize("name", list(COMENTION_PLAN_PINS))
-def test_comention_family_plan_shape(spark, monkeypatch, name):
-    from pyspark.sql import functions as F
-
-    from sift_spark.corpora.synthetic import wikify_links
-    from sift_spark.models import links as L
-    from sift_spark.operators import dedup
-
-    # entity_components hands its pair table to the driver-gated star
-    # contraction, whose checkpointed output hides the build: pin the
-    # pair table the contraction would receive
-    monkeypatch.setattr(dedup, "duplicate_clusters_star", lambda pairs: pairs.select(
-        F.col("doc1").alias("doc_id"), F.col("doc2").alias("rep_id")))
-    got = _node_counts(
-        lambda: getattr(L, name)(
-            wikify_links(spark.read.parquet(f"{SF_SMOKE}/documents.parquet"))
-        ),
-        ("ShuffleExchangeExec", "SortMergeJoinExec", "BroadcastHashJoinExec",
-         "HashAggregateExec"),
-    )
-    assert got == COMENTION_PLAN_PINS[name]
+# Registry queries built from both the ANN and the text kernels: the
+# SRP embeddings of the shared posting table fed to the tiled GEMM
+# pair scorer. The counts above hold their whole shape; these hold the
+# seam between the two halves.
+SEAM_QUERIES = ("doc_embedding_dup_pairs",)
 
 
-# Executed-plan node counts of the ANN family's registry queries at
-# SF_SMOKE, as (ShuffleExchange, FlatMapCoGroupsInPandas, MapInPandas,
-# SortMergeJoin, BroadcastHashJoin, Window). Recorded while every
-# operator in operators/similarity.py still carried its own copy of
-# the nearest-cell, GEMM top-k and recall kernels, so the shared
-# kernels must reproduce each physical shape exactly. The walk
-# includes the plans of persisted intermediates.
-ANN_PLAN_PINS = {
-    "ann_topk_bruteforce": (3, 1, 0, 0, 0, 1),
-    "ann_ivf_bucketed": (3, 1, 2, 0, 2, 1),
-    "ann_ivf_scaled": (3, 1, 2, 0, 2, 1),
-    "ann_lsh_bucketed": (4, 1, 2, 0, 2, 1),
-    "ann_lsh_scaled": (4, 1, 2, 0, 2, 1),
-    "ivf_pq_topk": (3, 1, 3, 0, 2, 1),
-    "ivf_query_index": (3, 1, 1, 0, 1, 1),
-    "ivfpq_query_index": (3, 1, 1, 0, 1, 1),
-    "ann_recall_report": (13, 3, 2, 2, 2, 3),
-    "ivf_recall_report": (13, 3, 1, 2, 1, 3),
-    "ivfpq_recall_report": (13, 3, 1, 2, 1, 3),
-    "hard_negatives": (3, 1, 0, 0, 0, 1),
-    "label_spread": (9, 2, 0, 1, 2, 4),
-    "knn_label_propagation": (3, 1, 0, 0, 1, 2),
-    "kmeans_clusters": (0, 0, 1, 0, 0, 0),
-    "semantic_dedup": (3, 0, 2, 1, 2, 0),
-    "dedup_embedding": (2, 1, 0, 0, 0, 0),
-    "doc_embedding_dup_pairs": (16, 1, 0, 0, 2, 0),
-    "cluster_balanced_sample": (1, 0, 1, 0, 0, 1),
-}
-
-
-@pytest.mark.parametrize("name", list(ANN_PLAN_PINS))
+@pytest.mark.parametrize("name", SEAM_QUERIES)
 def test_ann_family_plan_shape(spark, name):
-    from sift_spark.queries import QUERIES
-
-    got = _node_counts(
-        lambda: QUERIES[name](spark, SF_SMOKE),
-        ("ShuffleExchangeExec", "FlatMapCoGroupsInPandasExec", "MapInPandasExec",
-         "SortMergeJoinExec", "BroadcastHashJoinExec", "WindowExec"),
-    )
-    assert got == ANN_PLAN_PINS[name]
-
-
-# Executed-plan node counts of the dedup family at SF_SMOKE, as
-# (ShuffleExchange, SortMergeJoin, BroadcastHashJoin, HashAggregate,
-# ObjectHashAggregate, Window). Recorded while operators/dedup.py still
-# carried its own copies of the shingle build, the band-table build,
-# the band-collision join, the shared-shingle pair self-join and the
-# set-jaccard expression, so the shared kernels must reproduce each
-# physical shape exactly. Plain names are registry queries, which read
-# the session's shared artifacts; names ending in "()" are direct calls
-# on the documents with no ``sh=``, the path that builds its own
-# shingle table. The walk includes the plans of persisted intermediates.
-DEDUP_PLAN_PINS = {
-    "containment_pairs": (3, 0, 1, 2, 0, 0),
-    "dedup_ngram_jaccard": (3, 0, 1, 2, 0, 0),
-    "dedup_jaccard_prefix": (10, 0, 3, 2, 4, 6),
-    "dedup_incremental": (19, 0, 24, 26, 4, 0),
-    "lsh_recall_probe": (14, 0, 7, 16, 0, 0),
-    "fuzzy_contamination": (13, 0, 5, 16, 4, 0),
-    "contamination_check": (3, 0, 1, 4, 0, 0),
-    "contamination_summary": (18, 1, 6, 24, 4, 0),
-    "similar_docs": (7, 0, 2, 6, 0, 1),
-    "doc_novelty": (4, 0, 1, 4, 0, 0),
-    "corpus_shingles": (1, 0, 0, 0, 0, 0),
-    "dedup_exact": (1, 0, 0, 2, 0, 0),
-    "minhash_lsh_pairs()": (14, 0, 9, 34, 4, 0),
-    "ngram_jaccard_pairs()": (1, 0, 1, 2, 0, 0),
-    "containment_pairs()": (1, 0, 1, 2, 0, 0),
-    "ngram_jaccard_pairs_prefix()": (6, 0, 3, 2, 4, 6),
-    "lsh_recall_probe()": (10, 0, 7, 24, 0, 0),
-    "doc_novelty()": (2, 0, 1, 4, 0, 0),
-    "similar_docs()": (3, 0, 2, 6, 0, 1),
-    "fuzzy_contamination()": (10, 0, 5, 16, 4, 0),
-    "contamination_check()": (2, 0, 1, 4, 0, 0),
-    "minhash_lsh_pairs_incremental()": (24, 0, 24, 44, 4, 0),
-}
+    """The pairs leave the one tiled GEMM cogroup with the threshold
+    applied inside the kernel: no pair join, window or filter after it."""
+    rec = plan_record(spark, name)
+    assert rec.counts.get("FlatMapCoGroupsInPandasExec") == 1, rec.counts
+    assert "SortMergeJoinExec" not in rec.counts and "WindowExec" not in rec.counts, rec.counts
+    top = [line.lstrip(" :+-") for line in rec.plan.splitlines()[1:3]]
+    assert top[0].startswith("Project") and top[1].startswith("FlatMapCoGroupsInPandas"), rec.plan
 
 
-def _dedup_frame(spark, name):
-    """The frame a DEDUP_PLAN_PINS entry pins (see the table above)."""
-    from pyspark.sql import functions as F
-
-    from sift_spark.operators import dedup as D
-    from sift_spark.operators.text_analysis import contamination_check
-    from sift_spark.queries import QUERIES
-
-    if not name.endswith("()"):
-        return QUERIES[name](spark, SF_SMOKE)
-    op = name[:-2]
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    if op in ("fuzzy_contamination", "contamination_check"):
-        fn = D.fuzzy_contamination if op == "fuzzy_contamination" else contamination_check
-        return fn(docs.where(F.col("doc_id") % 20 != 0), docs.where(F.col("doc_id") % 20 == 0))
-    if op == "minhash_lsh_pairs_incremental":
-        old = docs.where(F.col("doc_id") % 5 != 0)
-        return D.minhash_lsh_pairs_incremental(
-            docs.where(F.col("doc_id") % 5 == 0), *D.lsh_index(old)
-        )
-    if op == "similar_docs":
-        return D.similar_docs(docs, query_doc_id=7)
-    return getattr(D, op)(docs)
-
-
-DEDUP_PLAN_CLASSES = ("ShuffleExchangeExec", "SortMergeJoinExec", "BroadcastHashJoinExec",
-                      "HashAggregateExec", "ObjectHashAggregateExec", "WindowExec")
-
-
-@pytest.mark.parametrize("name", list(DEDUP_PLAN_PINS))
-def test_dedup_family_plan_shape(spark, name):
-    got = _node_counts(lambda: _dedup_frame(spark, name), DEDUP_PLAN_CLASSES)
-    assert got == DEDUP_PLAN_PINS[name]
-
-
-# Executed-plan node counts of the text family at SF_SMOKE, as
-# (ShuffleExchange, SortMergeJoin, BroadcastHashJoin, HashAggregate,
-# Window). Recorded while every tf-accepting operator still wrote its
-# own (doc_id, term, tf) posting build, idf and sqrt(tf)·idf weight
-# table, so the shared builders must reproduce each physical shape
-# exactly. Plain names are registry queries, which read the session's
-# shared tf artifact; names ending in "()" are direct calls on the
-# documents with tf=None, the path that builds its own posting table.
-# The walk includes the plans of persisted intermediates. The
-# tfidf_search() and doc_top_terms() pins were recorded once their
-# posting table fed both the weights and df: one (doc_id, term)
-# aggregate per plan, df from a per-term window.
-TEXT_PLAN_PINS = {
-    "tfidf_search": (16, 0, 3, 20, 1),
-    "unigram_logprob": (10, 0, 1, 14, 0),
-    "doc_top_terms": (8, 0, 1, 8, 1),
-    "doc_srp_embeddings": (8, 0, 1, 10, 0),
-    "retrieval_triples": (28, 0, 6, 30, 3),
-    "corpus_topics": (58, 0, 12, 76, 1),
-    "vocab_coverage": (12, 0, 1, 18, 0),
-    "dsir_weights": (18, 2, 3, 22, 0),
-    "doc_embedding_dup_pairs": (16, 0, 2, 20, 0),
-    "corpus_tf": (2, 0, 0, 2, 0),
-    "term_idfs": (4, 0, 0, 6, 0),
-    "token_zipf_fit": (3, 0, 0, 6, 1),
-    "entity_mention_tf": (9, 0, 2, 8, 1),
-    "bm25_search": (9, 0, 2, 10, 1),
-    "doc_entropy": (3, 0, 0, 4, 0),
-    "unigram_logprob()": (7, 0, 1, 14, 0),
-    "doc_srp_embeddings()": (5, 0, 1, 10, 0),
-    "retrieval_triples()": (18, 0, 6, 30, 3),
-    "vocab_coverage()": (8, 0, 1, 18, 0),
-    "dsir_importance_weights()": (9, 0, 3, 18, 0),
-    "tfidf_search()": (8, 0, 1, 12, 3),
-    "doc_top_terms()": (4, 0, 0, 4, 2),
-}
-
-
-def _text_frame(spark, name):
-    """The frame a TEXT_PLAN_PINS entry pins (see the table above)."""
-    from sift_spark.operators import sampling
-    from sift_spark.operators import text_analysis as TA
-    from sift_spark.queries import QUERIES, SEARCH_TERMS
-
-    if not name.endswith("()"):
-        return QUERIES[name](spark, SF_SMOKE)
-    op = name[:-2]
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    if op == "tfidf_search":
-        return TA.tfidf_search(docs, SEARCH_TERMS, k=10)
-    fn = sampling.dsir_importance_weights if op == "dsir_importance_weights" else getattr(TA, op)
-    return fn(docs)
-
-
-@pytest.mark.parametrize("name", list(TEXT_PLAN_PINS))
+@pytest.mark.parametrize("name", SEAM_QUERIES)
 def test_text_family_plan_shape(spark, name):
-    got = _node_counts(
-        lambda: _text_frame(spark, name),
-        ("ShuffleExchangeExec", "SortMergeJoinExec", "BroadcastHashJoinExec",
-         "HashAggregateExec", "WindowExec"),
-    )
-    assert got == TEXT_PLAN_PINS[name]
+    """The SRP vectors are summed wide from the session's cached
+    (doc_id, term, tf) posting table: no long-format collect_list
+    re-assembly of the dimensions."""
+    rec = plan_record(spark, name)
+    assert "collect_list" not in rec.plan and "ObjectHashAggregateExec" not in rec.counts, rec.counts
+    assert any(
+        line.lstrip(" :+-").startswith("InMemoryRelation [doc_id#") and ", tf#" in line
+        for line in rec.plan.splitlines()
+    ), rec.plan
 
 
 def test_q6_all_predicates_pushed(spark):
@@ -562,10 +372,7 @@ def test_ann_ivf_scorer_is_cogrouped_gemm(spark):
 def test_url_canonical_all_builtin_expressions(spark):
     """canonical_url must stay JVM-side: no Python UDF anywhere in the
     plan (regex + array HOFs only), so it runs inside codegen."""
-    from sift_spark.queries import QUERIES
-
-    df = QUERIES["url_canonical_groups"](spark, SF_SMOKE)
-    plan = _plan(df)
+    plan = plan_record(spark, "url_canonical_groups").plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 

@@ -73,7 +73,7 @@ def test_walk_plan_has_single_join_per_step(spark):
     join per step."""
     from sift_spark.caching import release_local_caches
     from sift_spark.models.links import entity_random_walks
-    from tests.test_plan_audit import plan_nodes
+    from tests.plan_shapes import plan_nodes
 
     links = _links(spark, [("A", "B"), ("B", "C")])
     walk_len = 4
