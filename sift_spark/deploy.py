@@ -1,9 +1,10 @@
 """Deployment helpers: shipping the package to executor workers.
 
-In ``local[*]`` mode executor Python workers inherit the driver's
-``sys.path``; on ANY multi-process master (local-cluster, standalone,
-YARN, k8s) they do not, and every pandas-UDF closure pickles by module
-reference — so the package must travel with the job exactly as
+In ``local[*]`` mode ``session.get_spark`` puts the package's parent
+directory on the Python workers' ``PYTHONPATH``; on ANY multi-process
+master (local-cluster, standalone, YARN, k8s) that path need not
+exist, and every pandas-UDF closure pickles by module reference — so
+the package must travel with the job exactly as
 ``spark-submit --py-files`` would send it. ``ship_package`` zips the
 installed ``sift_spark`` tree and registers it via ``addPyFile``;
 ``session.get_spark`` calls it automatically for non-local masters.

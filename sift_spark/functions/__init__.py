@@ -2,7 +2,6 @@ from sift_spark.functions.core import (
     ENTITY_TOKENS,
     MOD31,
     WIKI_PREFIX,
-    cosine_sim,
     hash31,
     hash64,
     tokens,
@@ -12,7 +11,6 @@ __all__ = [
     "ENTITY_TOKENS",
     "MOD31",
     "WIKI_PREFIX",
-    "cosine_sim",
     "hash31",
     "hash64",
     "tokens",

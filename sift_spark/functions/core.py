@@ -271,18 +271,6 @@ def hash31(col: Column) -> Column:
     return hash64(col) % F.lit(MOD31)
 
 
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<numeric> columns (double math)."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
-    return dot / (na * nb)
-
-
 def sql_hash64(expr: str) -> str:
     """DuckDB twin of :func:`hash64` (takes a SQL expression string)."""
     return f"cast(concat('0x', substr(md5({expr}), 1, 15)) as bigint)"

@@ -56,7 +56,6 @@ from sift_spark.functions.core import (
     MINHASH_ROWS,
     MOD31,
     SIMHASH_BITS,
-    cosine_sim,
     guards_tf,
     hash31,
 )

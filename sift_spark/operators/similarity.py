@@ -1218,9 +1218,12 @@ def label_spread(emb: DataFrame, k: int = 5, n_rounds: int = 2,
     after ``n_rounds``. Vote ties break toward the smaller label —
     a total ordering, engine-exact.
 
-    Shape: the kNN edge table is built ONCE and persisted; each round
-    is one edge-keyed join against the current label table
-    (vocab-sized, k·N rows) + a per-node vote window. The lazy plan
+    Shape: the kNN edge table is built ONCE per plan and not
+    persisted: every round reads the same lazy frame, and AQE reuses
+    its exchange, so the event log shows one FlatMapCoGroupsInPandas
+    (GEMM) stage per build. Each round is one edge-keyed join against
+    the current label table (vocab-sized, k·N rows) + a per-node vote
+    window. The lazy plan
     grows linearly in rounds (each round references the previous
     labels once). ``method="exact"`` (oracle-pinned) builds the graph
     with the block-tiled GEMM — quadratic by design, measured DNF

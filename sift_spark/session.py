@@ -45,6 +45,28 @@ def shuffle_partitions_for(data_dir: str, cpus: int | None = None) -> int:
     return int(max(8, min(cpus, total // (4 * 1024 * 1024))))
 
 
+def python_worker_conf(master: str) -> dict[str, str]:
+    """Python-worker confs for ``master``: on ``local[...]`` the daemon
+    is :mod:`sift_spark.worker_daemon`, imported from this checkout.
+    Other masters keep ``pyspark.daemon``: the package reaches their
+    executors only through ``addPyFile``, after the daemon has started."""
+    if not master.startswith("local["):
+        return {}
+    # Each Python task's importlib.invalidate_caches() re-read the
+    # central directories of pyspark.zip, py4j and the spark-core jar
+    # (16 zip importers, 0.1-0.2 s per task before its kernel starts);
+    # the daemon re-reads an archive only after it changes on disk.
+    # Measured (4 cores): 0 instead of 16 re-reads per task, and
+    # catalog_sf0.01 wall_s median 2.98 → 2.34 s over 10 interleaved
+    # pairs. The executorEnv entry lets the daemon and every
+    # sift_spark UDF import from any driver cwd.
+    return {
+        "spark.python.daemon.module": "sift_spark.worker_daemon",
+        "spark.executorEnv.PYTHONPATH": os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__))),
+    }
+
+
 def get_spark(app_name: str = "sift_spark", shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """``extra_conf`` overlays builder configs LAST (so a caller can
@@ -113,7 +135,7 @@ def get_spark(app_name: str = "sift_spark", shuffle_partitions: int | None = Non
         # more heap + 40 MB non-heap.
         .config("spark.sql.codegen.cache.maxEntries", "512")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**python_worker_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
